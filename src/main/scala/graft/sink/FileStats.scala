@@ -139,7 +139,7 @@ final case class FileStats(rows: Long, cols: Map[String, ColStats]) {
             else Some(if (b < d) -1 else if (b > d) 1 else 0)
           }
         case ('s', x: String) =>
-          Some(UTF8String.fromString(s).compareTo(UTF8String.fromString(x)))
+          Some(UTF8String.fromString(s).binaryCompare(UTF8String.fromString(x)))
         case ('b', x: Boolean) =>
           Some(java.lang.Boolean.compare(s.toBoolean, x))
         case _ => None
@@ -376,10 +376,12 @@ object FileStats {
       private var mx: UTF8String = _
       override def observe(row: org.apache.spark.sql.catalyst.InternalRow, i: Int): Unit = {
         val v = row.getUTF8String(i)
-        // clone only on bound replacement: the row's buffer may be recycled
+        // clone only on bound replacement: the row's buffer may be recycled.
+        // binaryCompare, not compareTo: Spark's compareTo throws whenever
+        // `spark.testing` / SPARK_TESTING is set
         if (mn == null) { mn = v.clone(); mx = mn }
-        else if (v.compareTo(mn) < 0) mn = v.clone()
-        else if (v.compareTo(mx) > 0) mx = v.clone()
+        else if (v.binaryCompare(mn) < 0) mn = v.clone()
+        else if (v.binaryCompare(mx) > 0) mx = v.clone()
       }
       override def minMax: (Option[String], Option[String]) =
         if (mn == null) (None, None)

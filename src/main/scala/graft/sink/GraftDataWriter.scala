@@ -116,6 +116,17 @@ final class GraftDataWriter(
       bloom.foreach(b => Bloom.write(fs, dataFile, b.snapshotAndReset()))
   }
 
+  // Columnar segments' per-writer state, built once per writer rather than
+  // once per partition directory. One projection serves every segment:
+  // each write consumes its projected row before the next call. The pinned
+  // parquet conf is a full Configuration copy, fixed with the schema.
+  private lazy val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
+  private lazy val dataProjection =
+    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
+        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
+  private lazy val parquetConf = ParquetIO.pinnedWriterConf(conf, dataSchema)
+
   private def newSegment(partDir: String): Segment =
     if (opts.isParquet) new ParquetSegment(partDir)
     else if (opts.isOrc) new OrcSegment(partDir)
@@ -146,15 +157,9 @@ final class GraftDataWriter(
     * no-op.
     */
   private final class ParquetSegment(partDir: String) extends Segment {
-    private val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
-    private val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
-        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
+    private val project = dataProjection
     private val maxRowsPerFile = opts.batchSize.toLong * opts.txnPerBatch
-    // pin the writer conf ONCE per segment: the schema is fixed for the
-    // segment's lifetime, and the Configuration copy-walk is pure per-file
-    // overhead when repeated across thousands of streaming rotations
-    private val pinned = ParquetIO.pinnedWriterConf(conf, dataSchema)
+    private val pinned = parquetConf
     private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
     private var file: Path = _
     private var rowsInFile = 0L
@@ -210,10 +215,7 @@ final class GraftDataWriter(
     * (keep-alive is rejected at option parse).
     */
   private final class OrcSegment(partDir: String) extends Segment {
-    private val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
-    private val project = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
-        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
+    private val project = dataProjection
     private val maxRowsPerFile = opts.batchSize.toLong * opts.txnPerBatch
     private var writer: OrcIO.RowWriter = _
     private var file: Path = _

@@ -1,9 +1,10 @@
 package graft.sink
 
-import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming SOURCE over a graft-streaming table: tail the epoch commit log
   * — `spark.readStream.format("graft-streaming")` — turning the sink's
@@ -23,10 +24,10 @@ import org.apache.spark.sql.types.StructType
 final class GraftMicroBatchStream(
     requiredSchema: StructType,
     opts: GraftSinkOptions,
-    conf: SerializableHadoopConf)
+    conf: Broadcast[SerializableConfiguration])
   extends MicroBatchStream {
 
-  private def log = new CommitLog(opts.tableDir, conf.value)
+  private def log = new CommitLog(opts.tableDir, conf.value.value)
 
   // monotonic even across compaction: a compaction manifest preserves the
   // streaming watermark of the epochs it consumed

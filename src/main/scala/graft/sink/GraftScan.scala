@@ -4,11 +4,13 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Batch read path for a graft-streaming table:
   * `spark.read.format("graft-streaming").options(path/db/table).load()`.
@@ -90,8 +92,7 @@ final class GraftScan(
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(requiredSchema, opts,
-      new SerializableHadoopConf(org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration))
+      TaskConf.broadcast(org.apache.spark.sql.SparkSession.active.sparkContext))
 
   private lazy val plannedFiles: Seq[(String, Map[String, String])] = {
     val conf = org.apache.spark.sql.SparkSession.active
@@ -120,10 +121,12 @@ final class GraftScan(
         (plannedFiles.forall(_._1.endsWith(".orc")) &&
           OrcIO.batchReadSupported(requiredSchema)))
 
+  // once per scan, however often Spark asks for a reader factory
+  private lazy val taskConf =
+    TaskConf.broadcast(org.apache.spark.sql.SparkSession.active.sparkContext)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(requiredSchema,
-      new SerializableHadoopConf(org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration),
+    GraftReaderFactory(requiredSchema, taskConf,
       columnar = columnar,
       filters = pushedSourceFilters)
 }
@@ -132,14 +135,14 @@ final case class GraftInputPartition(
     file: String, partitionValues: Map[String, String]) extends InputPartition
 
 final case class GraftReaderFactory(
-    requiredSchema: StructType, conf: SerializableHadoopConf,
+    requiredSchema: StructType, conf: Broadcast[SerializableConfiguration],
     columnar: Boolean = false,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftPartitionReader(p, requiredSchema, conf, filters)
+    new GraftPartitionReader(p, requiredSchema, conf.value.value, filters)
   }
 
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
@@ -148,8 +151,8 @@ final case class GraftReaderFactory(
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
     if (p.file.endsWith(".orc"))
-      new GraftOrcColumnarReader(p, requiredSchema, conf, filters)
-    else new GraftColumnarReader(p, requiredSchema, conf, filters)
+      new GraftOrcColumnarReader(p, requiredSchema, conf.value.value, filters)
+    else new GraftColumnarReader(p, requiredSchema, conf.value.value, filters)
   }
 }
 
@@ -226,7 +229,7 @@ object GraftScan {
   */
 final class GraftColumnarReader(
     partition: GraftInputPartition, requiredSchema: StructType,
-    conf: SerializableHadoopConf,
+    conf: org.apache.hadoop.conf.Configuration,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
@@ -250,7 +253,7 @@ final class GraftColumnarReader(
   }
 
   private val reader = ParquetIO.createVectorizedReader(
-    new Path(partition.file), fileSchema, partSchema, partRow, conf.value,
+    new Path(partition.file), fileSchema, partSchema, partRow, conf,
     filters.toSeq)
   private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
   // the reorder permutation and the underlying vectors are fixed per
@@ -295,7 +298,7 @@ final class GraftColumnarReader(
   */
 final class GraftOrcColumnarReader(
     partition: GraftInputPartition, requiredSchema: StructType,
-    conf: SerializableHadoopConf,
+    conf: org.apache.hadoop.conf.Configuration,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
@@ -304,7 +307,7 @@ final class GraftOrcColumnarReader(
   private val fileSchema = StructType(requiredSchema.fields
     .filterNot(f => partition.partitionValues.contains(f.name)))
   private val reader = new OrcIO.BatchReader(
-    new Path(partition.file), fileSchema, conf.value, filters.toSeq)
+    new Path(partition.file), fileSchema, conf, filters.toSeq)
 
   private def constantFor(f: org.apache.spark.sql.types.StructField)
       : ConstantColumnVector = {
@@ -354,7 +357,7 @@ final class GraftOrcColumnarReader(
 
 final class GraftPartitionReader(
     partition: GraftInputPartition, requiredSchema: StructType,
-    conf: SerializableHadoopConf,
+    conf: org.apache.hadoop.conf.Configuration,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReader[InternalRow] {
 
@@ -383,7 +386,7 @@ final class GraftPartitionReader(
   private final class JsonlSource extends RowSource {
     private val decoder = new JsonRowDecoder(fileSchema)
     private val in = {
-      val fs = path.getFileSystem(conf.value)
+      val fs = path.getFileSystem(conf)
       new BufferedReader(new InputStreamReader(fs.open(path), StandardCharsets.UTF_8))
     }
     override def nextRow(): InternalRow = {
@@ -401,7 +404,7 @@ final class GraftPartitionReader(
     * the projected columns' chunks are decoded ([[ParquetIO.createReader]]).
     */
   private final class ParquetSource extends RowSource {
-    private val reader = ParquetIO.createReader(path, fileSchema, conf.value)
+    private val reader = ParquetIO.createReader(path, fileSchema, conf)
     override def nextRow(): InternalRow = reader.read()
     override def close(): Unit = reader.close()
   }
@@ -412,7 +415,7 @@ final class GraftPartitionReader(
     * ([[OrcIO.RowReader]]).
     */
   private final class OrcSource extends RowSource {
-    private val reader = new OrcIO.RowReader(path, fileSchema, conf.value,
+    private val reader = new OrcIO.RowReader(path, fileSchema, conf,
       filters.toSeq)
     override def nextRow(): InternalRow = reader.read()
     override def close(): Unit = reader.close()

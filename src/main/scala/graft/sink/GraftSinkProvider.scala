@@ -5,6 +5,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -14,6 +16,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** `format("graft-streaming")` — the sink's registration + construction
   * entry point, the Spark-4 connector expression of the reference's
@@ -31,10 +34,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    Spark itself rejects Complete/Update modes);
   *  - A3 options: [[GraftSinkOptions]];
   *  - A4 fan-out: `createStreamingWriterFactory` serializes (schema,
-  *    options) to executors, one [[GraftDataWriter]] per (partition, task,
-  *    epoch) — reference `HiveStreamWriter.scala:35-37,49-63` minus the
-  *    isolated-classloader reflection, which a single-Spark-version native
-  *    sink does not need (SURVEY §2.A A13).
+  *    options, a handle to the broadcast Hadoop conf) to executors, one
+  *    [[GraftDataWriter]] per (partition, task, epoch) — reference
+  *    `HiveStreamWriter.scala:35-37,49-63` minus the isolated-classloader
+  *    reflection, which a single-Spark-version native sink does not need
+  *    (SURVEY §2.A A13).
   *
   * The destination "table" is a directory `<path>/<db>.<table>/`; its schema
   * contract is recorded in `_schema.json` on first write and enforced on
@@ -196,6 +200,11 @@ class GraftSinkTable(writeSchema: StructType, opts: GraftSinkOptions)
 
   override def name(): String = s"graft-streaming:${opts.db}.${opts.table}"
 
+  // Spark's V2Writes asks this same table object for a write builder every
+  // epoch, so a streaming query broadcasts its task-side conf once — its
+  // first epoch's conf — not once per epoch or per task
+  private lazy val taskConf = TaskConf.broadcast(SparkSession.active.sparkContext)
+
   override def schema(): StructType = writeSchema
 
   override def capabilities(): util.Set[TableCapability] =
@@ -236,10 +245,9 @@ class GraftSinkTable(writeSchema: StructType, opts: GraftSinkOptions)
             s"(${schema.fieldNames.mkString(",")})")
       }
     }
-    val hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
     SchemaRegistry.saveIfAbsent(resolved, schema)
     new WriteBuilder {
-      override def build(): Write = new GraftWrite(schema, resolved, hadoopConf)
+      override def build(): Write = new GraftWrite(schema, resolved, taskConf)
     }
   }
 }
@@ -248,15 +256,16 @@ class GraftSinkTable(writeSchema: StructType, opts: GraftSinkOptions)
   * [[CommitLog]]; batch writes reuse the identical writer path with a
   * negative pseudo-epoch (single commit).
   */
-final class GraftWrite(schema: StructType, opts: GraftSinkOptions, conf: Configuration)
+final class GraftWrite(schema: StructType, opts: GraftSinkOptions,
+    conf: Broadcast[SerializableConfiguration])
   extends Write with Serializable with org.apache.spark.internal.Logging {
 
-  private def commitLog = new CommitLog(opts.tableDir, conf)
+  private def commitLog = new CommitLog(opts.tableDir, conf.value.value)
 
   override def toStreaming: StreamingWrite = new StreamingWrite {
     override def createStreamingWriterFactory(
         info: PhysicalWriteInfo): StreamingDataWriterFactory =
-      GraftWriterFactory(schema, opts, new SerializableHadoopConf(conf))
+      GraftWriterFactory(schema, opts, conf)
 
     /** REAL epoch commit — the reference's is a deliberate no-op
       * (`HiveStreamWriter.scala:39-41`), which is exactly what makes it
@@ -282,7 +291,7 @@ final class GraftWrite(schema: StructType, opts: GraftSinkOptions, conf: Configu
 
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-      val f = GraftWriterFactory(schema, opts, new SerializableHadoopConf(conf))
+      val f = GraftWriterFactory(schema, opts, conf)
       (partitionId: Int, taskId: Long) => f.createWriter(partitionId, taskId, -1L)
     }
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -320,27 +329,26 @@ final class GraftWrite(schema: StructType, opts: GraftSinkOptions, conf: Configu
   }
 }
 
-/** Hadoop Configuration is not Serializable; ship it writable-style. */
-final class SerializableHadoopConf(@transient var value: Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
+/** Task-side Hadoop configuration, shipped the way Spark's own file scans
+  * ship it: one broadcast per query (per scan for batch reads), so a task's
+  * closure carries only the broadcast handle. A conf inside the closure
+  * would be re-read, property by property, by every task: a fixed per-task
+  * cost growing with the size of the conf. The broadcast holds a COPY: a local
+  * executor reads the driver's broadcast object in place, and tasks must
+  * not share the driver's mutable `hadoopConfiguration`.
+  */
+object TaskConf {
+  def broadcast(sc: SparkContext): Broadcast[SerializableConfiguration] =
+    sc.broadcast(new SerializableConfiguration(new Configuration(sc.hadoopConfiguration)))
 }
 
 final case class GraftWriterFactory(
     schema: StructType,
     opts: GraftSinkOptions,
-    conf: SerializableHadoopConf)
+    conf: Broadcast[SerializableConfiguration])
   extends StreamingDataWriterFactory {
 
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(schema, opts, conf.value, partitionId, taskId, epochId)
+    new GraftDataWriter(schema, opts, conf.value.value, partitionId, taskId, epochId)
 }

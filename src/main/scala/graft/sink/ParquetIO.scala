@@ -42,8 +42,8 @@ object ParquetIO {
     * (CORRECTED) dates/timestamps as int64 micros; `init` of both Spark
     * write- and read-support asserts these keys are present.
     *
-    * Public so a writer with a fixed schema (one segment of a streaming
-    * task) pins ONCE and reuses the result across file rotations — a
+    * Public so a writer with a fixed schema (one streaming writer task)
+    * pins ONCE and reuses the result across its segments and rotations — a
     * `new Configuration(base)` copy walks every property of the base conf,
     * which is pure per-file overhead when repeated for thousands of small
     * streaming segments.
@@ -110,8 +110,8 @@ object ParquetIO {
     createWriterPinned(path, pinnedConf(conf, schema))
 
   /** Same, but over an ALREADY-PINNED conf ([[pinnedWriterConf]]) — a
-    * fixed-schema caller (one streaming segment) pins once and skips the
-    * per-file Configuration walk across rotations.
+    * fixed-schema caller (one streaming writer task) pins once and skips
+    * the per-file Configuration walk across segments and rotations.
     *
     * `bloomColumns` (r15, the parquet twin of the ORC writer blooms):
     * native per-row-group bloom filters for the named columns, so the

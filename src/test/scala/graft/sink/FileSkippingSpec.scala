@@ -241,6 +241,26 @@ class FileSkippingSpec extends SparkSpec {
     assert(FileStats.parse(Seq.empty).isEmpty)
   }
 
+  test("string stats work with spark.testing set (UTF8String.compareTo throws there)") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val prior = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "true")
+    try {
+      val running = new FileStats.Running(
+        StructType(Seq(StructField("s", StringType))), Seq(0))
+      Seq("mm", "aa", "zz").foreach(v =>
+        running.observe(org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(v))))
+      val st = FileStats.parse(running.snapshotAndReset(3L).split('\t').toSeq).get
+      assert(st.cols("s") === ColStats(Some(0L), Some("saa"), Some("szz")))
+      assert(st.prunes(EqualTo("s", "zzz")))
+      assert(!st.prunes(EqualTo("s", "mm")))
+    } finally prior match {
+      case Some(v) => System.setProperty("spark.testing", v)
+      case None => System.clearProperty("spark.testing")
+    }
+  }
+
   test("pruning logic edge cases: nulls, NaN refusal, boundary compares") {
     val st = FileStats(10L, Map(
       "a" -> ColStats(Some(0L), Some("l10"), Some("l20")),

@@ -217,7 +217,6 @@ class GraftSinkSpec extends SparkSpec {
 
   test("A8 exactly-once: replayed epoch commit publishes no duplicates") {
     val dir = tmp()
-    val conf = spark.sparkContext.hadoopConfiguration
     val o = GraftSinkOptions.from(new CaseInsensitiveStringMap(
       opts(dir).asJava))
     val schema = StructType(Seq(
@@ -225,7 +224,7 @@ class GraftSinkSpec extends SparkSpec {
     // the provider records the schema in newWriteBuilder; this test drives
     // GraftWrite directly, so record it here for the read-back
     SchemaRegistry.saveIfAbsent(o, schema)
-    val write = new GraftWrite(schema, o, conf)
+    val write = new GraftWrite(schema, o, TaskConf.broadcast(spark.sparkContext))
     val sw = write.toStreaming
     val factory = sw.createStreamingWriterFactory(new PhysicalWriteInfo {
       override def numPartitions(): Int = 1
@@ -639,7 +638,7 @@ class GraftSinkSpec extends SparkSpec {
     val stream = new GraftMicroBatchStream(
       StructType(Seq(StructField("id", IntegerType), StructField("msg", StringType))),
       sinkOpts,
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+      TaskConf.broadcast(spark.sparkContext))
     val snap = stream.latestOffset()
     assert(snap.json() === "-1|snap")
     assert(stream.deserializeOffset(snap.json()).json() === snap.json(),
@@ -871,7 +870,7 @@ class GraftSinkSpec extends SparkSpec {
     val o = GraftSinkOptions.from(new CaseInsensitiveStringMap(opts(dir).asJava))
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("msg", StringType)))
-    val write = new GraftWrite(schema, o, spark.sparkContext.hadoopConfiguration)
+    val write = new GraftWrite(schema, o, TaskConf.broadcast(spark.sparkContext))
     val sw = write.toStreaming
     val factory = sw.createStreamingWriterFactory(new PhysicalWriteInfo {
       override def numPartitions(): Int = 1

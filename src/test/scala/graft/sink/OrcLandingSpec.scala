@@ -73,7 +73,7 @@ class OrcLandingSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("msg", StringType)))
     SchemaRegistry.saveIfAbsent(o, schema)
-    val write = new GraftWrite(schema, o, hconf)
+    val write = new GraftWrite(schema, o, TaskConf.broadcast(spark.sparkContext))
     val sw = write.toStreaming
     val factory = sw.createStreamingWriterFactory(new PhysicalWriteInfo {
       override def numPartitions(): Int = 1
@@ -318,7 +318,7 @@ class OrcLandingSpec extends SparkSpec {
         else StructType(Seq(
           StructField("id", IntegerType), StructField("msg", StringType)))
       val o = GraftSinkOptions.from(new CaseInsensitiveStringMap(opts(dir).asJava))
-      val w = new GraftWrite(schema, o, hconf).toStreaming
+      val w = new GraftWrite(schema, o, TaskConf.broadcast(spark.sparkContext)).toStreaming
       val f = w.createStreamingWriterFactory(new PhysicalWriteInfo {
         override def numPartitions(): Int = 1
       })
@@ -359,7 +359,7 @@ class OrcLandingSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("msg", StringType)))
     SchemaRegistry.saveIfAbsent(o, schema)
-    val write = new GraftWrite(schema, o, hconf)
+    val write = new GraftWrite(schema, o, TaskConf.broadcast(spark.sparkContext))
     val sw = write.toStreaming
     val factory = sw.createStreamingWriterFactory(new PhysicalWriteInfo {
       override def numPartitions(): Int = 1
