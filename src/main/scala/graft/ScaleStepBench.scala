@@ -109,8 +109,7 @@ object ScaleStepBench {
       .select(col("doc_id"), col("text"))
     val batchDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 9)
       .select(col("doc_id"), col("text"))
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_scalestep_idx").toString + "/corpus.docs"
+    val idxDir = TempDirs.scratch("graft_scalestep_idx") + "/corpus.docs"
     SND.recordBatch(corpusDocs, idxDir, SND.BandingNgram, epochId = 0L)
 
     val results = Seq(

@@ -46,7 +46,7 @@ object SinkBench {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_sinkbench").toString
+    val dir = TempDirs.scratch("graft_sinkbench")
     val in = MemoryStream[Long]
     // reference-example row shape: key, message, event-type partition column
     val q = in.toDS()
@@ -160,7 +160,7 @@ object SinkBench {
     // ORC in-file SARG skipping (r15): post-compaction each partition dir
     // holds one wide ORC file (~rows/8 ≈ 12 row groups at defaults); a
     // point lookup's SearchArgument should decode ONE 10k row group, not
-    // the file. Measured through the production RowReader — the same
+    // the file. Measured through the production BatchReader — the same
     // reader the DSv2 scan drives — as decoded-row counts + wall.
     val orcSargJson = if (format == "orc") {
       val probePart = s"/etype=t${probeId % 8}/"
@@ -173,10 +173,10 @@ object SinkBench {
           org.apache.spark.sql.types.StringType)))
       def readRows(fs2: Seq[org.apache.spark.sql.sources.Filter]): (Long, Double) = {
         val t = System.nanoTime()
-        val r = new graft.sink.OrcIO.RowReader(
+        val r = new graft.sink.OrcIO.BatchReader(
           new org.apache.hadoop.fs.Path(f), schema,
           spark.sparkContext.hadoopConfiguration, fs2)
-        try { var n = 0L; while (r.read() != null) n += 1
+        try { var n = 0L; while (r.nextBatch()) n += r.batch.numRows
           (n, (System.nanoTime() - t) / 1e9) }
         finally r.close()
       }

@@ -57,15 +57,16 @@ final class GraftDataWriter(
     schema.fields.indices.filterNot(partIdx.contains(_))
   // LAZY: only the jsonl landing encodes rows as JSON, and its encoder
   // enforces the reference's scalar-only column contract at construction.
-  // The columnar landings (parquet/orc) handle nested types natively —
-  // e.g. the embed-banded dedup stream lands its `embedding` array — so
-  // the scalar check must not fire for formats that never use the encoder.
+  // The parquet landing handles nested types natively — e.g. the
+  // embed-banded dedup stream lands its `embedding` array — so the scalar
+  // check must not fire for formats that never use the encoder.
   private lazy val encoder = new JsonRowEncoder(schema, dataIdx)
-  // jsonl is the one format that uses the encoder, and its scalar-only
-  // schema contract must fail at WRITER CONSTRUCTION (as the reference's
-  // does), not at the first written row — an all-empty-partition epoch on
-  // a nested-schema jsonl stream would otherwise commit silently.
-  if (!opts.isParquet && !opts.isOrc) { encoder; () }
+  // jsonl and orc are scalar-only, and that contract must fail at WRITER
+  // CONSTRUCTION (as the reference's does), not at the first written row —
+  // an all-empty-partition epoch on a nested-schema stream would otherwise
+  // commit silently.
+  if (opts.isOrc) OrcIO.typeDescription(dataSchema)
+  else if (!opts.isParquet) encoder
 
   private val tablePath = new Path(opts.tableDir)
   // with Kerberos options configured, obtain the filesystem under the

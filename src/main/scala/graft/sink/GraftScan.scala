@@ -107,19 +107,18 @@ final class GraftScan(
     }.toArray
 
   /** Columnar (vectorized) batches when EVERY planned file is parquet
-    * (Spark's vectorized parquet decoder) or EVERY planned file is ORC
-    * (the [[OrcIO.OrcSparkColumnVector]] views over hive batches — r15)
-    * and the projection is batch-decodable. Spark requires a scan's
-    * partitions to be uniformly columnar or row-based, so one JSONL
-    * epoch — or a parquet/ORC mix — keeps the whole scan on the row
+    * (Spark's vectorized parquet decoder) and the projection is
+    * batch-decodable, or EVERY planned file is ORC ([[OrcIO.BatchReader]],
+    * whose views serve every type the ORC landing writes). Spark requires
+    * a scan's partitions to be uniformly columnar or row-based, so one
+    * JSONL epoch — or a parquet/ORC mix — keeps the whole scan on the row
     * path.
     */
   private[sink] lazy val columnar: Boolean =
     plannedFiles.nonEmpty && requiredSchema.nonEmpty &&
       ((plannedFiles.forall(_._1.endsWith(".parquet")) &&
           ParquetIO.batchReadSupported(requiredSchema)) ||
-        (plannedFiles.forall(_._1.endsWith(".orc")) &&
-          OrcIO.batchReadSupported(requiredSchema)))
+        plannedFiles.forall(_._1.endsWith(".orc")))
 
   // once per scan, however often Spark asks for a reader factory
   private lazy val taskConf =
@@ -288,13 +287,11 @@ final class GraftColumnarReader(
   override def close(): Unit = reader.close()
 }
 
-/** Vectorized ORC scan of one committed file (r15 — the ORC counterpart
-  * of [[GraftColumnarReader]]): hive `VectorizedRowBatch`es surface as
-  * Spark `ColumnarBatch`es through zero-copy
-  * [[OrcIO.OrcSparkColumnVector]] views, partition columns ride as
-  * `ConstantColumnVector`s, fields the file lacks (name-set schema drift)
-  * as null constants. Vectors are assembled once, in projection order —
-  * no per-batch reorder, no per-row materialization.
+/** Vectorized ORC scan of one committed file (the ORC counterpart of
+  * [[GraftColumnarReader]]): the [[OrcIO.BatchReader]]'s vectors — views
+  * over the hive batches, null constants for fields the file lacks — plus
+  * partition columns as `ConstantColumnVector`s, assembled once in
+  * projection order: no per-batch reorder, no per-row materialization.
   */
 final class GraftOrcColumnarReader(
     partition: GraftInputPartition, requiredSchema: StructType,
@@ -302,52 +299,30 @@ final class GraftOrcColumnarReader(
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+  import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
 
   private val fileSchema = StructType(requiredSchema.fields
     .filterNot(f => partition.partitionValues.contains(f.name)))
   private val reader = new OrcIO.BatchReader(
     new Path(partition.file), fileSchema, conf, filters.toSeq)
 
-  private def constantFor(f: org.apache.spark.sql.types.StructField)
-      : ConstantColumnVector = {
-    import org.apache.spark.sql.types._
-    val v = new ConstantColumnVector(reader.batch.getMaxSize, f.dataType)
-    GraftPartitionReader.fromPathString(
-      partition.partitionValues(f.name), f.dataType) match {
-      case null => v.setNull()
-      case s: UTF8String => v.setUtf8String(s)
-      case i: java.lang.Integer => v.setInt(i)
-      case l: java.lang.Long => v.setLong(l)
-      case sh: java.lang.Short => v.setShort(sh)
-      case b: java.lang.Byte => v.setByte(b)
-      case bo: java.lang.Boolean => v.setBoolean(bo)
-      case other => throw new IllegalStateException(
-        s"unexpected partition value $other for ${f.dataType}")
-    }
-    v
-  }
-
-  // projection order directly: file-backed views by name, partition
-  // constants, null constants for drift-absent fields
-  private val vectors: Array[org.apache.spark.sql.vectorized.ColumnVector] = {
-    val fileViews = fileSchema.fieldNames.zip(reader.vectors).toMap
-    requiredSchema.fields.map { f =>
-      if (partition.partitionValues.contains(f.name)) constantFor(f)
-      else fileViews(f.name) match {
-        case Some(view) => view
-        case None =>
-          val v = new ConstantColumnVector(reader.batch.getMaxSize, f.dataType)
-          v.setNull(); v
+  private val batch = {
+    val fileVectors = fileSchema.fieldNames.zip(reader.vectors).toMap
+    new org.apache.spark.sql.vectorized.ColumnarBatch(requiredSchema.fields.map { f =>
+      partition.partitionValues.get(f.name) match {
+        case Some(v) =>
+          val c = new ConstantColumnVector(OrcIO.BatchRows, f.dataType)
+          ColumnVectorUtils.populate(c,
+            InternalRow(GraftPartitionReader.fromPathString(v, f.dataType)), 0)
+          c
+        case None => fileVectors(f.name)
       }
-    }
+    })
   }
-  private val batch =
-    new org.apache.spark.sql.vectorized.ColumnarBatch(vectors)
 
   override def next(): Boolean = {
     if (!reader.nextBatch()) false
-    else { batch.setNumRows(reader.batch.size); true }
+    else { batch.setNumRows(reader.batch.numRows); true }
   }
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
@@ -409,15 +384,22 @@ final class GraftPartitionReader(
     override def close(): Unit = reader.close()
   }
 
-  /** ORC scan: like parquet, `fileSchema` drives an include mask pushed
-    * into the ORC read, so only projected streams are decoded, and the
-    * pushed filters become a SearchArgument for stripe/row-group skipping
-    * ([[OrcIO.RowReader]]).
+  /** ORC scan: the rows of the same [[OrcIO.BatchReader]] batches the
+    * columnar scan reads — one decode path, with the same projection mask
+    * and stripe/row-group SearchArgument skipping.
     */
   private final class OrcSource extends RowSource {
-    private val reader = new OrcIO.RowReader(path, fileSchema, conf,
+    private val reader = new OrcIO.BatchReader(path, fileSchema, conf,
       filters.toSeq)
-    override def nextRow(): InternalRow = reader.read()
+    private var rows: java.util.Iterator[InternalRow] =
+      java.util.Collections.emptyIterator()
+    override def nextRow(): InternalRow = {
+      while (!rows.hasNext) {
+        if (!reader.nextBatch()) return null
+        rows = reader.batch.rowIterator()
+      }
+      rows.next()
+    }
     override def close(): Unit = reader.close()
   }
 

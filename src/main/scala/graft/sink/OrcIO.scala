@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.hive.ql.exec.vector._
 import org.apache.orc.{OrcFile, TypeDescription}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,11 +16,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * `HiveWriter.scala:70-77`). A user migrating a reference deployment can
   * keep the bytes-on-disk format: `option("format", "orc")`.
   *
-  * Built on the PUBLIC orc-core API (`OrcFile` + `VectorizedRowBatch`) —
-  * no Spark internals are reachable for ORC the way `ParquetWriteSupport`
-  * is for parquet, and the sink's supported surface is scalar columns only
-  * (the reference's JSON-scalar contract), so the row↔vector conversion
-  * is a small closed type dispatch.
+  * Writes and reads go through the PUBLIC orc-core API (`OrcFile` +
+  * `VectorizedRowBatch`); the sink's supported surface is scalar columns
+  * only (the reference's JSON-scalar contract), so the row→vector fill
+  * and the vector views are small closed type dispatches. Reads have ONE
+  * path, [[BatchReader]]: the columnar scan serves its batches and the row
+  * scan iterates their rows. Pushed filters become ORC SearchArguments
+  * through Spark's own `OrcFilters` ([[searchArgument]]).
+  *
+  * Spark's ORC reader, vectors and serializer are NOT used, because each
+  * would change what the sink stores or reads back:
+  *   - `OrcColumnarBatchReader` opens files without `useUTCTimestamp`, so
+  *     timestamps would shift with the host zone;
+  *   - `OrcAtomicColumnVector` rebases dates and timestamps from the
+  *     hybrid Julian calendar, while the writer here stores proleptic
+  *     Gregorian values as they are;
+  *   - `OrcSerializer` builds an `OrcStruct` per row on the write path.
   *
   * Determinism pins, mirroring ParquetIO's CORRECTED/UTC stance:
   * timestamps write and read with `useUTCTimestamp(true)` on BOTH sides,
@@ -107,7 +117,7 @@ object OrcIO {
     * ([[Compact]]) keeps OR-merging sidecars byte-wise without decoding
     * data files, identically for jsonl/parquet/orc.
     *
-    * r15: with SARG pushdown now in [[OrcIO.RowReader]], native writer
+    * r15: with SARG pushdown in [[OrcIO.BatchReader]], native writer
     * blooms became what the r13 deferral predicted — COMPLEMENTARY
     * intra-file skipping after planning — so `bloom.columns` now ALSO
     * enables `bloomFilterColumns` on the ORC writer: inside a file a task
@@ -195,155 +205,10 @@ object OrcIO {
     }
   }
 
-  private type Extractor = (ColumnVector, Int) => Any
-
-  private def extractorFor(dt: DataType): Extractor = dt match {
-    case StringType => (v, r) => {
-      val bv = v.asInstanceOf[BytesColumnVector]
-      UTF8String.fromBytes(bv.vector(r), bv.start(r), bv.length(r))
-    }
-    case IntegerType => (v, r) => v.asInstanceOf[LongColumnVector].vector(r).toInt
-    case LongType => (v, r) => v.asInstanceOf[LongColumnVector].vector(r)
-    case ShortType => (v, r) => v.asInstanceOf[LongColumnVector].vector(r).toShort
-    case ByteType => (v, r) => v.asInstanceOf[LongColumnVector].vector(r).toByte
-    case DoubleType => (v, r) => v.asInstanceOf[DoubleColumnVector].vector(r)
-    case FloatType => (v, r) => v.asInstanceOf[DoubleColumnVector].vector(r).toFloat
-    case BooleanType => (v, r) => v.asInstanceOf[LongColumnVector].vector(r) != 0L
-    case d: DecimalType => (v, r) =>
-      org.apache.spark.sql.types.Decimal(
-        v.asInstanceOf[DecimalColumnVector].vector(r)
-          .getHiveDecimal.bigDecimalValue, d.precision, d.scale)
-    case TimestampType | TimestampNTZType => (v, r) => {
-      val tv = v.asInstanceOf[TimestampColumnVector]
-      Math.floorDiv(tv.time(r), 1000L) * 1000000L + tv.nanos(r) / 1000L
-    }
-    case DateType => (v, r) => v.asInstanceOf[LongColumnVector].vector(r).toInt
-    case BinaryType => (v, r) => {
-      val bv = v.asInstanceOf[BytesColumnVector]
-      java.util.Arrays.copyOfRange(bv.vector(r), bv.start(r), bv.start(r) + bv.length(r))
-    }
-    case other => throw new IllegalArgumentException(
-      s"graft-streaming ORC landing supports scalar columns only; got $other")
-  }
-
-  /** Row reader over one committed ORC file, returning `InternalRow`s in
-    * `requestedSchema` field order. COLUMN PRUNING is pushed into the ORC
-    * scan via the include mask (only projected streams are read and
-    * decoded); fields are matched BY NAME against the file schema
-    * (name-set contract — field order may drift across lineages), and
-    * fields absent from the file materialize as null.
-    *
-    * STRIPE/ROW-GROUP PREDICATE PUSHDOWN (r14 verdict #3): pushed source
-    * filters convert to an ORC [[org.apache.hadoop.hive.ql.io.sarg.SearchArgument]]
-    * ([[OrcIO.toSearchArgument]] — same translation shape as Spark's
-    * built-in ORC source, rebuilt on the public `SearchArgumentFactory`
-    * API because Spark's converter is `private[sql]`), so the scan skips
-    * whole stripes via
-    * stripe statistics and 10k-row row groups via row indexes — and,
-    * when the writer recorded native blooms, equality/IN leaves skip row
-    * groups whose bloom provably excludes the value even when min/max
-    * ranges overlap. Conservative by construction: `allowSARGToFilter`
-    * stays off (surviving row groups return ALL their rows; ORC never
-    * drops individual rows here) and Spark re-applies every filter
-    * post-scan. Filters whose columns fall outside the file schema
-    * (partition columns, schema drift) are declined by the conversion and
-    * simply don't skip. This closes the parquet/ORC asymmetry where only
-    * parquet reads skipped row groups inside committed files.
+  /** Rows per decoded batch, and the capacity of the constant vectors the
+    * scan puts beside the file's own.
     */
-  /** Shared open/projection/pushdown setup of the row and columnar
-    * readers — ONE definition of the include mask and SARG construction,
-    * so the two scan paths cannot drift in skipping behavior.
-    * `useUTCTimestamp` rides the reader options; row-level Options
-    * carries the projection mask and the search argument. The SARG
-    * column domain is the PROJECTED fields present in THIS file
-    * (post-scan re-evaluation means Spark always includes filter columns
-    * in the projection), so a filter on a column this lineage lacks
-    * declines to convert instead of mis-skipping.
-    */
-  private final class OpenedOrc(path: Path, requestedSchema: StructType,
-      conf: Configuration, filters: Seq[org.apache.spark.sql.sources.Filter]) {
-    val reader = OrcFile.createReader(path,
-      OrcFile.readerOptions(conf).useUTCTimestamp(true))
-    val fileTd = reader.getSchema
-    val fileNames = fileTd.getFieldNames.asScala.toIndexedSeq
-    // requested field i ← file column fileCol(i), or -1 when absent
-    val fileCol: Array[Int] =
-      requestedSchema.fields.map(f => fileNames.indexOf(f.name))
-    private val include = {
-      val inc = new Array[Boolean](fileTd.getMaximumId + 1)
-      inc(0) = true
-      fileCol.foreach { c =>
-        if (c >= 0) {
-          val child = fileTd.getChildren.get(c)
-          (child.getId to child.getMaximumId).foreach(id => inc(id) = true)
-        }
-      }
-      inc
-    }
-    val rows = {
-      var opts = reader.options.include(include)
-      if (filters.nonEmpty) {
-        val sargTypes = requestedSchema.fields
-          .filter(f => fileNames.contains(f.name))
-          .map(f => f.name -> f.dataType).toMap
-        OrcIO.toSearchArgument(sargTypes, filters)
-          .foreach(sarg => opts = opts.searchArgument(sarg, fileNames.toArray))
-      }
-      reader.rows(opts)
-    }
-  }
-
-  final class RowReader(path: Path, requestedSchema: StructType,
-      conf: Configuration,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty) {
-    private val o = new OpenedOrc(path, requestedSchema, conf, filters)
-    private val fileCol = o.fileCol
-    private val extractors: Array[Extractor] =
-      requestedSchema.fields.map(f => extractorFor(f.dataType))
-    private val rows = o.rows
-    private val batch = o.fileTd.createRowBatch(1024)
-    private var pos = 0
-
-    /** Next row, or null at EOF. */
-    def read(): InternalRow = {
-      if (pos >= batch.size) {
-        if (!rows.nextBatch(batch)) return null
-        // same dense-batch assumption as [[BatchReader.nextBatch]]
-        require(!batch.selectedInUse,
-          "ORC returned a selected-rows batch; dense positional reads would be wrong")
-        pos = 0
-      }
-      val values = new Array[Any](fileCol.length)
-      var i = 0
-      while (i < fileCol.length) {
-        val c = fileCol(i)
-        if (c >= 0) {
-          val v = batch.cols(c)
-          val r = if (v.isRepeating) 0 else pos
-          values(i) =
-            if (!v.noNulls && v.isNull(r)) null
-            else extractors(i)(v, r)
-        }
-        i += 1
-      }
-      pos += 1
-      new GenericInternalRow(values)
-    }
-
-    def close(): Unit = { rows.close(); o.reader.close() }
-  }
-
-  /** Scalar types the columnar ORC adapter serves — the sink's own write
-    * contract, so every graft-written ORC file batch-reads.
-    */
-  def batchReadSupported(schema: StructType): Boolean =
-    schema.fields.forall(_.dataType match {
-      case StringType | IntegerType | LongType | ShortType | ByteType |
-           DoubleType | FloatType | BooleanType | DateType | BinaryType |
-           TimestampType | TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    })
+  private[sink] val BatchRows = 4096
 
   /** Spark [[org.apache.spark.sql.vectorized.ColumnVector]] VIEW over one
     * hive `ColumnVector` of a `VectorizedRowBatch` — the zero-copy bridge
@@ -418,162 +283,104 @@ object OrcIO {
       throw new UnsupportedOperationException("scalar columns only")
   }
 
-  /** Batched reader over one committed ORC file: same projection mask,
-    * name-based field matching, and SARG pushdown as [[RowReader]], but
-    * surfaced as hive `VectorizedRowBatch`es with per-field
-    * [[OrcSparkColumnVector]] views for the columnar scan path.
+  /** Reader over one committed ORC file, and the only ORC decode path:
+    * the columnar scan serves its batches ([[GraftOrcColumnarReader]]) and
+    * the row scan iterates their rows ([[GraftPartitionReader]]).
+    *
+    *  - COLUMN PRUNING: only the projected fields' streams are read and
+    *    decoded (the include mask). Fields are matched BY NAME against the
+    *    file schema (name-set contract — field order may drift across
+    *    lineages); a field the file lacks reads as a null constant.
+    *  - STRIPE/ROW-GROUP PUSHDOWN: pushed filters become an ORC
+    *    SearchArgument ([[searchArgument]]) over the projected fields
+    *    present in THIS file, so the scan skips whole stripes via stripe
+    *    statistics and 10k-row row groups via row indexes — and, when the
+    *    writer recorded native blooms, equality/IN leaves skip row groups
+    *    whose bloom excludes the value even when min/max ranges overlap.
+    *    A filter on a column this lineage lacks declines instead of
+    *    mis-skipping. Conservative by construction: `allowSARGToFilter`
+    *    stays off (surviving row groups return ALL their rows) and Spark
+    *    re-applies every filter post-scan.
     */
   final class BatchReader(path: Path, requestedSchema: StructType,
       conf: Configuration,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty) {
-    private val o = new OpenedOrc(path, requestedSchema, conf, filters)
-    private val fileCol = o.fileCol
-    private val rows = o.rows
-    val batch: VectorizedRowBatch = o.fileTd.createRowBatch(4096)
-
-    /** Per requested field: its adapter view, or None when the file lacks
-      * the column (the scan serves those as null constants).
-      */
-    val vectors: Array[Option[OrcSparkColumnVector]] =
-      requestedSchema.fields.zip(fileCol).map { case (f, c) =>
-        if (c < 0) None
-        else Some(new OrcSparkColumnVector(f.dataType, batch.cols(c)))
+    private val reader = OrcFile.createReader(path,
+      OrcFile.readerOptions(conf).useUTCTimestamp(true))
+    private val fileTd = reader.getSchema
+    private val fileNames = fileTd.getFieldNames.asScala.toIndexedSeq
+    // requested field i ← file column fileCol(i), or -1 when absent
+    private val fileCol: Array[Int] =
+      requestedSchema.fields.map(f => fileNames.indexOf(f.name))
+    private val rows = {
+      val include = new Array[Boolean](fileTd.getMaximumId + 1)
+      include(0) = true
+      fileCol.filter(_ >= 0).foreach { c =>
+        val child = fileTd.getChildren.get(c)
+        (child.getId to child.getMaximumId).foreach(include(_) = true)
       }
+      val opts = reader.options.include(include)
+      val present = StructType(
+        requestedSchema.fields.filter(f => fileNames.contains(f.name)))
+      searchArgument(present, filters)
+        .foreach(opts.searchArgument(_, fileNames.toArray))
+      reader.rows(opts)
+    }
+    private val hiveBatch = fileTd.createRowBatch(BatchRows)
+
+    /** Per requested field, in `requestedSchema` order: its view over the
+      * file's column, or a null constant when the file lacks the field.
+      */
+    val vectors: Array[org.apache.spark.sql.vectorized.ColumnVector] =
+      requestedSchema.fields.zip(fileCol).map {
+        case (f, c) if c >= 0 => new OrcSparkColumnVector(f.dataType, hiveBatch.cols(c))
+        case (f, _) =>
+          val v = new org.apache.spark.sql.execution.vectorized
+            .ConstantColumnVector(BatchRows, f.dataType)
+          v.setNull(); v
+      }
+    private val views = vectors.collect { case v: OrcSparkColumnVector => v }
+
+    /** The current batch over [[vectors]], refilled by [[nextBatch]]. */
+    val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(vectors)
 
     /** Fill the next batch; false at EOF. */
     def nextBatch(): Boolean = {
-      val more = rows.nextBatch(batch)
+      val more = rows.nextBatch(hiveBatch)
       // positional reads assume the batch is dense: a selection vector
       // (row-level SARG filtering, allowSARGToFilter — never enabled
       // here) would make positions 0..size wrong rows. Fail loudly if an
       // orc-core behavior change ever flips it on.
-      require(!more || !batch.selectedInUse,
+      require(!more || !hiveBatch.selectedInUse,
         "ORC returned a selected-rows batch; dense positional reads would be wrong")
-      if (more) vectors.foreach(_.foreach(_.batchRows = batch.size))
+      if (more) {
+        views.foreach(_.batchRows = hiveBatch.size)
+        batch.setNumRows(hiveBatch.size)
+      }
       more
     }
 
-    def close(): Unit = { rows.close(); o.reader.close() }
+    def close(): Unit = { rows.close(); reader.close() }
   }
 
-  /** Spark source filters → ORC [[SearchArgument]] over the given
-    * (file-present, projected) column types — built on the PUBLIC
-    * `SearchArgumentFactory` API (Spark's own `OrcFilters` is
-    * `private[sql]`). Scope matches the sink's scalar contract, declined
-    * conservatively everywhere else:
-    *
-    *   - integral → LONG, float/double → FLOAT, string → STRING,
-    *     boolean → BOOLEAN; date/timestamp/decimal/binary decline (the
-    *     manifest stats + sidecar blooms already skip at file level).
-    *   - `And` with one convertible side keeps that side (sound: a
-    *     conjunct alone only skips MORE conservatively); `Or` requires
-    *     both sides; `Not` requires STRICT convertibility of its child —
-    *     a partially-converted child under negation would skip row
-    *     groups the full predicate matches.
-    *   - null literals decline (SQL null-comparison semantics stay with
-    *     Spark's post-scan re-evaluation).
+  /** Pushed source filters → ORC SearchArgument over `fields` (the
+    * projected fields present in one file), built by Spark's own
+    * `OrcFilters` through [[org.apache.spark.sql.GraftSqlBridge]]. Only
+    * integral, float/double, string and boolean fields take part:
+    * date/timestamp/decimal/binary columns are left to the manifest stats
+    * and sidecar blooms, which already skip at file level. `OrcFilters`
+    * keeps a convertible `And` side and declines partial `Or`/`Not`
+    * conversions and filters on columns outside `fields`.
     */
-  private[sink] def toSearchArgument(
-      types: Map[String, DataType],
+  private[sink] def searchArgument(fields: StructType,
       filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Option[org.apache.hadoop.hive.ql.io.sarg.SearchArgument] = {
-    import org.apache.hadoop.hive.ql.io.sarg.{PredicateLeaf, SearchArgument, SearchArgumentFactory}
-    import org.apache.spark.sql.sources._
-    type B = SearchArgument.Builder
-
-    def leafType(name: String): Option[PredicateLeaf.Type] =
-      types.get(name).collect {
-        case ByteType | ShortType | IntegerType | LongType => PredicateLeaf.Type.LONG
-        case FloatType | DoubleType => PredicateLeaf.Type.FLOAT
-        case StringType => PredicateLeaf.Type.STRING
-        case BooleanType => PredicateLeaf.Type.BOOLEAN
-      }
-
-    // EXACT widenings only, mirroring FileStats.asLong/asDouble: a
-    // generic Number coercion (longValue()/doubleValue()) would round a
-    // >2^53 Long into a FLOAT leaf or truncate 1.5 into a LONG leaf, and
-    // ORC would then row-group-skip on the wrong value — a silent
-    // over-skip. Mismatched value classes decline the whole SARG (no
-    // pushdown, never a wrong one).
-    def lit(t: PredicateLeaf.Type, v: Any): Option[AnyRef] =
-      if (v == null) None
-      else t match {
-        case PredicateLeaf.Type.LONG => v match {
-          case n: java.lang.Long => Some(n)
-          case n: java.lang.Integer => Some(java.lang.Long.valueOf(n.longValue()))
-          case n: java.lang.Short => Some(java.lang.Long.valueOf(n.longValue()))
-          case n: java.lang.Byte => Some(java.lang.Long.valueOf(n.longValue()))
-          case _ => None
-        }
-        case PredicateLeaf.Type.FLOAT => v match {
-          case n: java.lang.Double => Some(n)
-          case n: java.lang.Float => Some(java.lang.Double.valueOf(n.doubleValue()))
-          case n: java.lang.Integer => Some(java.lang.Double.valueOf(n.doubleValue()))
-          case n: java.lang.Short => Some(java.lang.Double.valueOf(n.doubleValue()))
-          case n: java.lang.Byte => Some(java.lang.Double.valueOf(n.doubleValue()))
-          case _ => None
-        }
-        case PredicateLeaf.Type.STRING => v match {
-          case s: String => Some(s)
-          case _ => None
-        }
-        case PredicateLeaf.Type.BOOLEAN => v match {
-          case b: java.lang.Boolean => Some(b)
-          case _ => None
-        }
-        case _ => None
-      }
-
-    /** Builder action for one filter, or None when it can't convert.
-      * `strict` (under Not): And may not drop an unconvertible side.
-      */
-    def convert(f: Filter, strict: Boolean): Option[B => B] = f match {
-      case And(l, r) =>
-        (convert(l, strict), convert(r, strict)) match {
-          case (Some(cl), Some(cr)) =>
-            Some(b => cr(cl(b.startAnd())).end())
-          case (one, other) if !strict =>
-            one.orElse(other)
-          case _ => None
-        }
-      case Or(l, r) =>
-        (convert(l, strict), convert(r, strict)) match {
-          case (Some(cl), Some(cr)) => Some(b => cr(cl(b.startOr())).end())
-          case _ => None
-        }
-      case Not(c) =>
-        convert(c, strict = true).map(cc => b => cc(b.startNot()).end())
-      case EqualTo(a, v) => for { t <- leafType(a); l <- lit(t, v) }
-        yield (b: B) => b.equals(a, t, l)
-      case EqualNullSafe(a, v) => for { t <- leafType(a); l <- lit(t, v) }
-        yield (b: B) => b.nullSafeEquals(a, t, l)
-      case LessThan(a, v) => for { t <- leafType(a); l <- lit(t, v) }
-        yield (b: B) => b.lessThan(a, t, l)
-      case LessThanOrEqual(a, v) => for { t <- leafType(a); l <- lit(t, v) }
-        yield (b: B) => b.lessThanEquals(a, t, l)
-      case GreaterThan(a, v) => for { t <- leafType(a); l <- lit(t, v) }
-        yield (b: B) => b.startNot().lessThanEquals(a, t, l).end()
-      case GreaterThanOrEqual(a, v) => for { t <- leafType(a); l <- lit(t, v) }
-        yield (b: B) => b.startNot().lessThan(a, t, l).end()
-      case In(a, vs) => leafType(a).flatMap { t =>
-        val ls = vs.map(v => lit(t, v))
-        if (ls.isEmpty || ls.exists(_.isEmpty)) None
-        else Some((b: B) => b.in(a, t, ls.map(_.get): _*))
-      }
-      case IsNull(a) => leafType(a).map(t => (b: B) => b.isNull(a, t))
-      case IsNotNull(a) =>
-        leafType(a).map(t => (b: B) => b.startNot().isNull(a, t).end())
-      case _ => None
-    }
-
-    val convertible = filters.flatMap(f => convert(f, strict = false))
-    if (convertible.isEmpty) None
-    else scala.util.Try {
-      val b = SearchArgumentFactory.newBuilder().startAnd()
-      convertible.foreach(c => c(b))
-      b.end().build()
-    }.toOption
-  }
+      : Option[org.apache.hadoop.hive.ql.io.sarg.SearchArgument] =
+    org.apache.spark.sql.GraftSqlBridge.orcSearchArgument(
+      StructType(fields.filter(_.dataType match {
+        case ByteType | ShortType | IntegerType | LongType | FloatType |
+             DoubleType | StringType | BooleanType => true
+        case _ => false
+      })), filters)
 
   /** ORC `ColumnStatistics` → manifest [[FileStats]], same tags/domains as
     * the parquet footer mapping: integers/dates/timestamp-micros → 'l',

@@ -1,6 +1,13 @@
 package org.apache.spark.sql
 
+import scala.util.Try
+
+import org.apache.hadoop.hive.ql.io.sarg.SearchArgument
+
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.orc.OrcFilters
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into the `private[sql]` Column ↔ Expression converters —
   * the standard extension-library pattern for using a custom Catalyst
@@ -31,4 +38,12 @@ object GraftSqlBridge {
     cs.internalCreateDataFrame(
       df.queryExecution.toRdd.map(_.copy()), df.schema, isStreaming = false)
   }
+
+  /** Spark's own ORC filter conversion (`OrcFilters`, the one its ORC
+    * source pushes with): source filters → an ORC SearchArgument over the
+    * fields of `schema`, or None when nothing converts. `createFilter`
+    * throws on a null literal; such filters decline instead.
+    */
+  def orcSearchArgument(schema: StructType, filters: Seq[Filter]): Option[SearchArgument] =
+    Try(OrcFilters.createFilter(schema, filters)).toOption.flatten
 }

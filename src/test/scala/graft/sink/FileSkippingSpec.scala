@@ -369,9 +369,9 @@ class FileSkippingSpec extends SparkSpec {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("msg",
         org.apache.spark.sql.types.StringType)))
-    val r = new OrcIO.RowReader(new org.apache.hadoop.fs.Path(files.head),
+    val r = new OrcIO.BatchReader(new org.apache.hadoop.fs.Path(files.head),
       schema, spark.sparkContext.hadoopConfiguration, filters.toSeq)
-    try { var n = 0L; while (r.read() != null) n += 1; n }
+    try { var n = 0L; while (r.nextBatch()) n += r.batch.numRows; n }
     finally r.close()
   }
 
@@ -388,6 +388,17 @@ class FileSkippingSpec extends SparkSpec {
     assert(orcRowCount(dir, EqualTo("id", 999999L)) === 0L)
     // unconvertible filter (column not in the file) degrades to no-skip
     assert(orcRowCount(dir, EqualTo("nope", 1L)) === 30000L)
+  }
+
+  test("ORC pushdown keeps every row a fractional bound admits") {
+    // Spark's SARG conversion casts a literal to the column's leaf type
+    // (a pushed EqualTo("id", 1.5) would become id = 1), so this pins that
+    // the planner only pushes literals that already have the column's
+    // type: `id < 20000.5` reaches the scan as `id <= 20000`
+    val dir = writeOrc30k()
+    val t = spark.read.format("graft-streaming")
+      .options(opts(dir, "format" -> "orc")).load()
+    assert(t.where("id < 20000.5").count() === 10001L)
   }
 
   test("ORC native blooms skip in-range misses; absent without the option") {
@@ -483,9 +494,10 @@ class FileSkippingSpec extends SparkSpec {
 
   test("SARG conversion: And drops unconvertible sides, Not must not") {
     import org.apache.spark.sql.types._
-    val types = Map[String, DataType]("id" -> LongType, "msg" -> StringType)
+    val fields = StructType(Seq(
+      StructField("id", LongType), StructField("msg", StringType)))
     def conv(fs: org.apache.spark.sql.sources.Filter*) =
-      OrcIO.toSearchArgument(types, fs.toSeq)
+      OrcIO.searchArgument(fields, fs.toSeq)
     assert(conv(EqualTo("id", 1L)).isDefined)
     assert(conv(In("msg", Array("a", "b"))).isDefined)
     // And keeps the convertible conjunct (skipping on it alone is sound)

@@ -232,7 +232,7 @@ class OrcLandingSpec extends SparkSpec {
     import spark.implicits._
     val dir = tmp()
     implicit val sqlCtx = spark.sqlContext
-    val df = spark.range(0, 300).selectExpr(
+    val dense = spark.range(0, 300).selectExpr(
       "id",
       "cast(id as int) as i",
       "cast(id % 7 as short) as sh",
@@ -244,7 +244,11 @@ class OrcLandingSpec extends SparkSpec {
       "timestamp_millis(1577836800000 + id * 1000) as ts",
       "cast(concat('bin', id) as binary) as bin",
       "cast(id as decimal(10,2)) / 4 as dec")
-    def land(table: String, format: String): Unit = {
+    // every typed column is null on one row in eleven
+    val df = dense.selectExpr("id" +: dense.columns.tail
+      .map(c => s"if(id % 11 = 3, null, $c) as $c").toSeq: _*)
+    def land(table: String, format: String,
+        ids: Seq[Long] = 0L until 300L): Unit = {
       val in = MemoryStream[Long]
       val q = in.toDS().toDF("seed").join(df, $"seed" === $"id").drop("seed")
         .writeStream.format("graft-streaming")
@@ -252,13 +256,23 @@ class OrcLandingSpec extends SparkSpec {
         .option("format", format)
         .option("checkpointLocation", s"$dir/_cp_$table")
         .start()
-      in.addData(0L until 300L: _*)
+      in.addData(ids: _*)
       q.processAllAvailable()
       q.stop()
     }
     land("orc", "orc")
     land("pq", "parquet")
     land("js", "jsonl")
+    // one orc and one jsonl epoch in one table: the scan takes the row
+    // path, so the ORC rows come through ColumnarBatch.rowIterator
+    land("mix", "orc", 0L until 150L)
+    val mixOpts = Map("path" -> dir, "db" -> "fmt", "table" -> "mix")
+    df.where("id >= 150").write.format("graft-streaming").options(mixOpts)
+      .option("format", "jsonl").mode("append").save()
+    val mixScan = new GraftScanBuilder(df.schema,
+      GraftSinkOptions.from(new CaseInsensitiveStringMap(mixOpts.asJava)))
+    assert(!mixScan.build().asInstanceOf[GraftScan].columnar,
+      "an orc + jsonl table must take the row path")
     val orc = CommitLog.readCommitted(spark, s"$dir/fmt.orc")
     val pq = CommitLog.readCommitted(spark, s"$dir/fmt.pq")
     val js = CommitLog.readCommitted(spark, s"$dir/fmt.js")
@@ -267,6 +281,83 @@ class OrcLandingSpec extends SparkSpec {
       "orc and parquet landings must read back identically")
     assert(orc.exceptAll(js).isEmpty && js.exceptAll(orc).isEmpty,
       "orc and jsonl landings must read back identically")
+    val mix = CommitLog.readCommitted(spark, s"$dir/fmt.mix")
+    assert(mix.count() === 300)
+    assert(mix.exceptAll(pq).isEmpty && pq.exceptAll(mix).isEmpty,
+      "the orc row path must read back what the parquet landing does")
+  }
+
+  test("orc round-trips dates and timestamps exactly outside UTC, columnar and row paths") {
+    val saved = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(
+      java.util.TimeZone.getTimeZone("America/Los_Angeles"))
+    try {
+      val dir = tmp()
+      val stamps = Seq("1500-03-01 00:00:00.123456",
+        "1900-01-01 00:00:00.123456", "2020-06-15 12:34:56.654321")
+      spark.sql(stamps.zipWithIndex.map { case (t, i) =>
+        s"select $i as id, date'1500-03-01' as d, " +
+          s"timestamp'$t' as ts, timestamp_ntz'$t' as ntz"
+      }.mkString(" union all "))
+        .write.format("graft-streaming").options(opts(dir))
+        .mode("append").save()
+      // proleptic Gregorian, UTC: what the session wrote
+      val day = java.time.LocalDate.parse("1500-03-01").toEpochDay.toInt
+      def micros(t: String): Long = {
+        val ldt = java.time.LocalDateTime.parse(t.replace(' ', 'T'))
+        ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000
+      }
+      val expected = stamps.zipWithIndex.map { case (t, i) =>
+        (i, day, micros(t), micros(t)) }
+
+      import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
+      val schema = StructType(Seq(StructField("id", IntegerType),
+        StructField("d", DateType), StructField("ts", TimestampType),
+        StructField("ntz", TimestampNTZType)))
+      val files = new CommitLog(s"$dir/testdb.t", hconf).committedFiles()
+      assert(files.nonEmpty && files.forall(_.endsWith(".orc")))
+      def values(r: org.apache.spark.sql.catalyst.InternalRow) =
+        (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3))
+      val columnar = files.flatMap { f =>
+        val rd = new GraftOrcColumnarReader(
+          GraftInputPartition(f, Map.empty), schema, hconf)
+        try Iterator.continually(rd.next()).takeWhile(identity)
+          .flatMap(_ => rd.get().rowIterator().asScala.map(values)).toList
+        finally rd.close()
+      }
+      val rowPath = files.flatMap { f =>
+        val rd = new GraftPartitionReader(
+          GraftInputPartition(f, Map.empty), schema, hconf)
+        try Iterator.continually(rd.next()).takeWhile(identity)
+          .map(_ => values(rd.get())).toList
+        finally rd.close()
+      }
+      assert(columnar.sortBy(_._1) === expected)
+      assert(rowPath.sortBy(_._1) === expected)
+    } finally java.util.TimeZone.setDefault(saved)
+  }
+
+  test("orc landing rejects a non-scalar column even when the epoch is empty") {
+    import spark.implicits._
+    val dir = tmp()
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Int]
+    // every row is filtered out, so no writer ever sees a row: the
+    // scalar-only contract must fail at writer construction
+    val q = in.toDS().filter(_ < 0).map(i => (i, Seq(i)))
+      .toDF("id", "xs")
+      .writeStream.format("graft-streaming").options(opts(dir))
+      .option("checkpointLocation", s"$dir/_cp").start()
+    in.addData(1 to 10: _*)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("scalar columns only"))),
+      s"expected the scalar-only contract, got $e")
+    assert(new CommitLog(s"$dir/testdb.t", hconf).manifests().isEmpty,
+      "no epoch may commit")
   }
 
   test("orc vectorized path: all-orc scans go columnar; nulls + partition constants exact") {
