@@ -40,8 +40,12 @@ object TempDirs {
     p.toString
   }
 
-  private def delete(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(delete))
+  /** Deletes `f` and, for a directory, everything below it (a symbolic
+    * link is deleted, not followed).
+    */
+  private[graft] def delete(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(delete))
     f.delete()
     ()
   }

@@ -440,10 +440,7 @@ object Compact {
     // fixpoint loop. Only a SINGLE empty manifest short-circuits: folding
     // it would just mint a new empty manifest each cycle.
     if (oldFiles.isEmpty && live.size <= 1) return Result(0, 0, 0)
-    val raw = fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
+    val dataFs = DataFs.resolve(fs)
     // a manifest-listed file deleted out from under the table (manual
     // cleanup, foreign tooling) is unrecoverable either way; consuming its
     // manifest WITHOUT it heals the table — the dangling reference
@@ -539,10 +536,10 @@ object Compact {
               if (out == null) {
                 val target = new Path(dir, s"$stem-${targets.size}.jsonl")
                 written += target; targets += target
-                out = raw.create(target, false)
+                out = dataFs.create(target, false)
                 outBytes = 0L
               }
-              val in = raw.open(new Path(f))
+              val in = dataFs.open(new Path(f))
               try {
                 var n = in.read(buf)
                 while (n >= 0) { out.write(buf, 0, n); outBytes += n; n = in.read(buf) }

@@ -80,16 +80,10 @@ final class GraftDataWriter(
     case None => tablePath.getFileSystem(conf)
   }
 
-  /** Data files go through the raw filesystem when `fs` layers client-side
-    * checksums (local fs): ChecksumFileSystem's output stream never
-    * propagates flush(), so the keep-alive heartbeat could not make bytes
-    * visible mid-epoch. On HDFS/S3A `fs` is already raw (server-side
-    * integrity) and this is an identity.
+  /** Data files and new partition directories go through [[DataFs]]:
+    * resolved once per writer and shared by every segment and rotation.
     */
-  private lazy val dataFs: FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
+  private lazy val dataFs: FileSystem = DataFs.resolve(fs)
 
   /** One open segment per partition spec (reference's per-task writer map,
     * `HiveStreamDataWriter.scala:44,82-94`). Two landings share the
@@ -135,12 +129,12 @@ final class GraftDataWriter(
 
   private def segmentDir(partDir: String): Path = {
     val dir = if (partDir.isEmpty) tablePath else new Path(tablePath, partDir)
-    if (!opts.autoCreatePartitions && partDir.nonEmpty && !fs.exists(dir)) {
+    if (!opts.autoCreatePartitions && partDir.nonEmpty && !dataFs.exists(dir)) {
       throw new IllegalStateException(
         s"Partition directory $dir does not exist and " +
           s"${GraftSinkOptions.AUTO_CREATE_PARTITIONS} is false")
     }
-    fs.mkdirs(dir)
+    dataFs.mkdirs(dir)
     dir
   }
 
@@ -170,7 +164,7 @@ final class GraftDataWriter(
       file = segmentFile(segmentDir(partDir), seq, "parquet")
       // like the ORC landing: bloom.columns also records native
       // per-row-group blooms (partition columns are path-only, filtered)
-      writer = ParquetIO.createWriterPinned(file, pinned,
+      writer = ParquetIO.createWriter(file, dataFs, pinned,
         bloomColumns = opts.bloomColumns.filter(dataSchema.fieldNames.contains))
       seq += 1
       rowsInFile = 0L
@@ -225,7 +219,7 @@ final class GraftDataWriter(
 
     private def open(): Unit = {
       file = segmentFile(segmentDir(partDir), seq, "orc")
-      writer = new OrcIO.RowWriter(file, dataSchema, conf,
+      writer = new OrcIO.RowWriter(file, dataFs, dataSchema, conf,
         bloomColumns = opts.bloomColumns)
       seq += 1
       rowsInFile = 0L
@@ -420,7 +414,7 @@ final class GraftDataWriter(
   override def abort(): Unit = synchronized {
     heartbeat.foreach(_.shutdown())
     segments.values.foreach(_.discard())
-    // both landings create through the raw fs (no .crc sidecars exist);
+    // every landing creates through `dataFs` (no .crc sidecars exist);
     // deleting through the checksum-layered `fs` is still correct — it
     // removes a sidecar if one exists and the data file either way
     files.foreach { p =>

@@ -127,7 +127,7 @@ object OrcIO {
     * with their indexes intact, so native blooms survive folds without
     * re-derivation.
     *
-    * Create through the RAW fs (no client-side
+    * Create through the writer's data fs ([[DataFs]]: no client-side
     * `.crc` sidecars — measured the dominant per-file cost on the parquet
     * path), rows buffer into a 1024-row `VectorizedRowBatch`, stripes
     * flush at 16 MiB to match the parquet segment's row-group sizing (a
@@ -143,15 +143,11 @@ object OrcIO {
     * ambiguous with +0.999999s. Not fixable client-side; the parquet and
     * JSONL landings store exact micros and are unaffected.
     */
-  final class RowWriter(path: Path, schema: StructType, conf: Configuration,
-      bloomColumns: Seq[String] = Seq.empty) {
+  final class RowWriter(path: Path, fs: org.apache.hadoop.fs.FileSystem,
+      schema: StructType, conf: Configuration, bloomColumns: Seq[String] = Seq.empty) {
     private val td = typeDescription(schema)
     private val fillers: Array[Filler] = schema.fields.map(f => fillerFor(f.dataType))
     private val writer = {
-      val fs = path.getFileSystem(conf) match {
-        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-        case other => other
-      }
       var opts = OrcFile.writerOptions(conf)
         .setSchema(td)
         .fileSystem(fs)

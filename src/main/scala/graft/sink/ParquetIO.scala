@@ -42,16 +42,13 @@ object ParquetIO {
     * (CORRECTED) dates/timestamps as int64 micros; `init` of both Spark
     * write- and read-support asserts these keys are present.
     *
-    * Public so a writer with a fixed schema (one streaming writer task)
-    * pins ONCE and reuses the result across its segments and rotations — a
+    * A writer with a fixed schema (one streaming writer task) pins ONCE
+    * and reuses the result across its segments and rotations — a
     * `new Configuration(base)` copy walks every property of the base conf,
     * which is pure per-file overhead when repeated for thousands of small
     * streaming segments.
     */
-  def pinnedWriterConf(base: Configuration, schema: StructType): Configuration =
-    pinnedConf(base, schema)
-
-  private def pinnedConf(base: Configuration, schema: StructType): Configuration = {
+  def pinnedWriterConf(base: Configuration, schema: StructType): Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val conf = new Configuration(base)
     ParquetWriteSupport.setSchema(schema, conf)
@@ -74,16 +71,14 @@ object ParquetIO {
   }
 
   /** OutputFile over an EXPLICIT filesystem instead of
-    * `path.getFileSystem(conf)` — so segment writes can go through the raw
-    * fs when the resolved one layers client-side checksums (local fs).
-    * Measured on the streaming-segment shape (88 × ~11 k-row files): the
-    * checksummed create+close is ~12 ms/file — the dominant per-file cost,
-    * 3× the parquet encode itself — because every segment becomes two files
-    * (data + .crc sidecar) plus redundant client-side checksumming. On
-    * HDFS/S3A the resolved fs is already raw (server-side integrity) and
-    * this changes nothing. Mirrors the JSONL path's `dataFs`.
+    * `path.getFileSystem(conf)`, so segment writes go through the sink's
+    * data fs ([[DataFs]]). Measured on the streaming-segment shape (88 ×
+    * ~11 k-row files): the checksummed create+close is ~12 ms/file — the
+    * dominant per-file cost, 3× the parquet encode itself — because every
+    * segment becomes two files (data + .crc sidecar) plus redundant
+    * client-side checksumming.
     */
-  private final class RawFsOutputFile(fs: org.apache.hadoop.fs.FileSystem, path: Path)
+  private final class FsOutputFile(fs: org.apache.hadoop.fs.FileSystem, path: Path)
     extends org.apache.parquet.io.OutputFile {
     override def create(blockSizeHint: Long): org.apache.parquet.io.PositionOutputStream =
       org.apache.parquet.hadoop.util.HadoopStreams.wrap(fs.create(path, false))
@@ -94,24 +89,11 @@ object ParquetIO {
     override def getPath: String = path.toString
   }
 
-  private def rawFs(path: Path, conf: Configuration): org.apache.hadoop.fs.FileSystem =
-    path.getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-
-  /** One open parquet segment. `rowGroupSize` is deliberately small
+  /** One open parquet segment, created through `fs` over an already-pinned
+    * conf ([[pinnedWriterConf]]). `rowGroupSize` is deliberately small
     * (16 MiB) for a STREAMING writer: an epoch's worth of one partition's
     * rows is typically far below the 128 MiB batch default, and a row group
     * buffers entirely in executor memory until flushed.
-    */
-  def createWriter(
-      path: Path, schema: StructType, conf: Configuration): ParquetWriter[InternalRow] =
-    createWriterPinned(path, pinnedConf(conf, schema))
-
-  /** Same, but over an ALREADY-PINNED conf ([[pinnedWriterConf]]) — a
-    * fixed-schema caller (one streaming writer task) pins once and skips
-    * the per-file Configuration walk across segments and rotations.
     *
     * `bloomColumns` (r15, the parquet twin of the ORC writer blooms):
     * native per-row-group bloom filters for the named columns, so the
@@ -122,10 +104,10 @@ object ParquetIO {
     * skipping tiers on both columnar formats (manifest sidecar at plan
     * time, native bloom inside opened files).
     */
-  def createWriterPinned(
-      path: Path, pinned: Configuration,
+  def createWriter(
+      path: Path, fs: org.apache.hadoop.fs.FileSystem, pinned: Configuration,
       bloomColumns: Seq[String] = Seq.empty): ParquetWriter[InternalRow] = {
-    var b = new RowWriterBuilder(new RawFsOutputFile(rawFs(path, pinned), path))
+    var b = new RowWriterBuilder(new FsOutputFile(fs, path))
       .withConf(pinned)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriteMode(ParquetFileWriter.Mode.CREATE)
@@ -164,7 +146,7 @@ object ParquetIO {
     * `ColumnVector`s, rows are never materialized, and downstream
     * whole-stage codegen consumes the batches directly. Partition columns
     * are appended as constant vectors via `initBatch`. Rebase pins match
-    * [[createWriter]] (CORRECTED / UTC), so the files this sink writes
+    * [[pinnedWriterConf]] (CORRECTED / UTC), so the files this sink writes
     * round-trip bit-exactly.
     */
   def createVectorizedReader(

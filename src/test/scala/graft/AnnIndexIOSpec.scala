@@ -23,7 +23,7 @@ class AnnIndexIOSpec extends SparkSpec {
   }
 
   private def tmpBase(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_annio_$tag").toString
+    tempDir(s"graft_annio_$tag")
 
   for (byResidual <- Seq(false, true)) {
     val tag = if (byResidual) "residual" else "plain"

@@ -27,7 +27,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("tiered compaction: runs stay bounded, keys exact, protected epoch untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("banddex_tier").toString
+    val dir = tempDir("banddex_tier")
     val tableDir = s"$dir/corpus.docs"
     val compactEvery = 4
     var sawTierMerge = false
@@ -79,7 +79,7 @@ class BandIndexSpec extends SparkSpec {
         rng = rng * 6364136223846793005L + 1442695040888963407L
         (math.abs(rng >> 33) % bound).toInt
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"banddex_prop$seed").toString
+      val dir = tempDir(s"banddex_prop$seed")
       val tableDir = s"$dir/corpus.docs"
       val expected = scala.collection.mutable.Set.empty[Long]
       (0 until 10).foreach { e =>
@@ -116,7 +116,7 @@ class BandIndexSpec extends SparkSpec {
 
   test("mixed-size epochs: runs span several size classes, each class under the fan-out") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("banddex_mixed").toString
+    val dir = tempDir("banddex_mixed")
     val tableDir = s"$dir/corpus.docs"
     // epoch sizes spanning orders of magnitude → L0 runs land in different
     // log4-byte classes; each compact seals the in-flight cycle's deltas
@@ -146,7 +146,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("layout meta: recorded at creation, validated on open, one-time heal for meta-less tables") {
-    val dir = java.nio.file.Files.createTempDirectory("banddex_meta").toString
+    val dir = tempDir("banddex_meta")
     val tableDir = s"$dir/corpus.docs"
     val fs = fsOf(tableDir)
     appendEpoch(tableDir, 0)
@@ -190,7 +190,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("lease takeover during a delayed renew converges to a single writer") {
-    val dir = java.nio.file.Files.createTempDirectory("banddex_toctou").toString
+    val dir = tempDir("banddex_toctou")
     val tableDir = s"$dir/corpus.docs"
     val fs = fsOf(tableDir)
     // writer A holds the lease, then stalls past staleMs (no heartbeat)
@@ -223,7 +223,7 @@ class BandIndexSpec extends SparkSpec {
     // the common interleave the grace window DOES close: B's create lands,
     // then A's delayed write lands INSIDE B's grace wait → B's re-verify
     // sees the clobber and B aborts its start instead of running dual
-    val dir2 = java.nio.file.Files.createTempDirectory("banddex_toctou2").toString
+    val dir2 = tempDir("banddex_toctou2")
     val tableDir2 = s"$dir2/corpus.docs"
     B.acquireLease(spark, tableDir2, "writer-A", staleMs = 100L)
     Thread.sleep(150)
@@ -245,7 +245,7 @@ class BandIndexSpec extends SparkSpec {
 
   test("crash window: planted tmp dirs and stale attempt files are invisible, swept, and superseded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("banddex_crash").toString
+    val dir = tempDir("banddex_crash")
     val tableDir = s"$dir/corpus.docs"
     val fs = fsOf(tableDir)
     appendEpoch(tableDir, 0)
@@ -295,7 +295,7 @@ class BandIndexSpec extends SparkSpec {
   test("single-writer lease: a second concurrent start fails fast; restart after stop proceeds with state intact") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("banddex_lease").toString
+    val dir = tempDir("banddex_lease")
     val tableDir = s"$dir/corpus.docs"
     val base = (1 to 24).map(i => s"tok$i").mkString(" ")
     val in = MemoryStream[(Long, String)]
@@ -340,7 +340,7 @@ class BandIndexSpec extends SparkSpec {
   }
 
   test("lease lifecycle: stale locks are broken, a usurped writer fails its renew") {
-    val dir = java.nio.file.Files.createTempDirectory("banddex_stale").toString
+    val dir = tempDir("banddex_stale")
     val tableDir = s"$dir/corpus.docs"
     // writer A acquires, then "crashes" (no release, no renewals)
     B.acquireLease(spark, tableDir, "writer-A", staleMs = 100L)
@@ -370,7 +370,7 @@ class BandIndexSpec extends SparkSpec {
     // (a) crash between the very first data commit and the index append:
     // the replay must NOT backfill the epoch's own landed rows (the probe
     // could not hide them — backfill publishes under epoch -1)
-    val dir = java.nio.file.Files.createTempDirectory("banddex_replay").toString
+    val dir = tempDir("banddex_replay")
     val tableDir = s"$dir/corpus.docs"
     val docs = Seq((1L, (1 to 24).map(i => s"tok$i").mkString(" ")))
       .toDF("doc_id", "text")
@@ -389,7 +389,7 @@ class BandIndexSpec extends SparkSpec {
         "excludeEpoch cannot hide backfill-published keys")
     // contrast: the same table replayed at a LATER epoch does backfill the
     // genuinely-earlier corpus
-    val dir2 = java.nio.file.Files.createTempDirectory("banddex_replay2").toString
+    val dir2 = tempDir("banddex_replay2")
     val tableDir2 = s"$dir2/corpus.docs"
     graft.streaming.StreamingNearDedup.withBands(docs)
       .write.format("graft-streaming").mode("append")
@@ -402,7 +402,7 @@ class BandIndexSpec extends SparkSpec {
     // (b) an all-short-doc epoch publishes no keys, but its append must
     // still create the index dir — otherwise ensureBackfilled re-runs a
     // full-table backfill scan EVERY epoch
-    val dir3 = java.nio.file.Files.createTempDirectory("banddex_empty").toString
+    val dir3 = tempDir("banddex_empty")
     val tableDir3 = s"$dir3/corpus.docs"
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

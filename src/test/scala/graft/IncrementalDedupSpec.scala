@@ -39,7 +39,7 @@ class IncrementalDedupSpec extends SparkSpec {
       implicit val sqlCtx = s.sqlContext
 
       // live stream: two epochs through the real foreachBatch policy
-      val dir = java.nio.file.Files.createTempDirectory("inc_equiv").toString
+      val dir = tempDir("inc_equiv")
       val in = MemoryStream[(Long, String)]
       // parquet landing: the ngram scheme's banded frame carries the
       // `nkeys` ARRAY column, which the jsonl scalar contract rejects
@@ -60,8 +60,7 @@ class IncrementalDedupSpec extends SparkSpec {
       // batch path: seed a FRESH index with epoch 0's arrivals (all of
       // them — the policy records kept and dropped alike), then dedupe
       // epoch 1 against it without any stream
-      val dir2 = java.nio.file.Files.createTempDirectory("inc_batch")
-        .toString + "/corpus.docs"
+      val dir2 = tempDir("inc_batch") + "/corpus.docs"
       val df0 = epoch0.toDF("doc_id", "text")
       val df1 = epoch1.toDF("doc_id", "text")
       StreamingNearDedup.recordBatch(df0, dir2, banding, epochId = 0L)
@@ -86,8 +85,7 @@ class IncrementalDedupSpec extends SparkSpec {
       "loudly instead of mixing key spaces") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("inc_mixed")
-      .toString + "/corpus.docs"
+    val dir = tempDir("inc_mixed") + "/corpus.docs"
     StreamingNearDedup.recordBatch(Seq(1L -> base).toDF("doc_id", "text"),
       dir, StreamingNearDedup.BandingMinHash, epochId = 0L)
     val e = intercept[IllegalStateException] {
@@ -102,8 +100,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("empty and key-less batches are safe no-ops for the decision") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("inc_empty")
-      .toString + "/corpus.docs"
+    val dir = tempDir("inc_empty") + "/corpus.docs"
     StreamingNearDedup.recordBatch(Seq(1L -> base).toDF("doc_id", "text"),
       dir, StreamingNearDedup.BandingNgram, epochId = 0L)
     // a batch of ONLY key-less (sub-3-token) docs: everything lands
@@ -124,8 +121,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
-    val dir = java.nio.file.Files.createTempDirectory("inc_persist")
-      .toString + "/corpus.docs"
+    val dir = tempDir("inc_persist") + "/corpus.docs"
     StreamingNearDedup.recordBatch(
       Seq(1L -> base).toDF("doc_id", "text"), dir,
       StreamingNearDedup.BandingNgram, epochId = 0L)
@@ -162,8 +158,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // recomputable) afterwards.
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("inc_managed")
-      .toString + "/corpus.docs"
+    val dir = tempDir("inc_managed") + "/corpus.docs"
     StreamingNearDedup.recordBatch(
       Seq(1L -> base).toDF("doc_id", "text"), dir,
       StreamingNearDedup.BandingNgram, epochId = 0L)
@@ -185,8 +180,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("record=true makes the refresh part of the corpus for the next batch") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("inc_record")
-      .toString + "/corpus.docs"
+    val dir = tempDir("inc_record") + "/corpus.docs"
     StreamingNearDedup.recordBatch(
       Seq(1L -> base).toDF("doc_id", "text"), dir,
       StreamingNearDedup.BandingNgram, epochId = 0L)

@@ -296,7 +296,7 @@ class OperatorPropertiesSpec extends SparkSpec {
     // text → identical minhash signature and simhash) and 150 vectors share
     // every sign-LSH band key (identical embedding). The capped expansion
     // must neither go quadratic nor emit pairs from the oversized buckets.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_degen").toString
+    val tmp = tempDir("graft_degen")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("doc_id", "lang", "n_chars", "text")
     val doc1 = docs.orderBy("doc_id").limit(1)
@@ -1529,7 +1529,7 @@ class OperatorPropertiesSpec extends SparkSpec {
       k = Similarity.IvfTrainedCells, iters = Similarity.IvfTrainedIters,
       sampleCap = Similarity.IvfTrainedSampleCap)
     val pq = Similarity.trainPqLocal(vecs)
-    val dir = java.nio.file.Files.createTempDirectory("pq_codes").toString
+    val dir = tempDir("pq_codes")
     Similarity.pqEncodeOn(vecs, coarse, pq).write.mode("overwrite").parquet(dir)
     val encoded = spark.read.parquet(dir)
     val fromCodes = Similarity.ivfPqSearch(encoded, vecs, probe, coarse, pq,

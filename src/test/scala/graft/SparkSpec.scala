@@ -1,15 +1,33 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run in
   * the forked test JVM).
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp directory, deleted with everything in it when the suite
+    * ends.
+    */
+  def tempDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(p)
+    p.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try {
+      var p = tempDirs.poll()
+      while (p != null) { TempDirs.delete(p.toFile); p = tempDirs.poll() }
+    } finally super.afterAll()
 }
 
 object SparkSpec {

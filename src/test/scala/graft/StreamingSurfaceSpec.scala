@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -241,7 +240,7 @@ class StreamingSurfaceSpec extends SparkSpec {
   test("streaming content dedup: duplicates across epochs never reach the table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sdedup").toString
+    val dir = tempDir("sdedup")
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingDedup.start(
       in.toDF().toDF("doc_id", "text"),
@@ -276,7 +275,7 @@ class StreamingSurfaceSpec extends SparkSpec {
   test("streaming NEAR-dedup: LSH-banded docs dropped across and within epochs, chains through dropped docs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sneardedup").toString
+    val dir = tempDir("sneardedup")
     val base = (1 to 24).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 24).map(i => if (i == 12) "CHANGED" else s"tok$i").mkString(" ")
     val distinctText = (100 to 123).map(i => s"other$i").mkString(" ")
@@ -354,7 +353,7 @@ class StreamingSurfaceSpec extends SparkSpec {
             Option(r.get(r.fieldIndex(s"band_$b"))).map(_.asInstanceOf[Long]))
             .toSet
         }.toMap
-    val dir = java.nio.file.Files.createTempDirectory("ssimdedup").toString
+    val dir = tempDir("ssimdedup")
     val tableDir = s"$dir/corpus.docs"
     val base = (1 to 24).map(i => s"tok$i").mkString(" ")
     // deterministic fixture search (same approach as the minhash case):
@@ -420,7 +419,7 @@ class StreamingSurfaceSpec extends SparkSpec {
             Option(r.get(r.fieldIndex(s"band_$b"))).map(_.asInstanceOf[Long]))
             .toSet
         }.toMap
-    val dir = java.nio.file.Files.createTempDirectory("sembdedup").toString
+    val dir = tempDir("sembdedup")
     val tableDir = s"$dir/corpus.docs"
     val rnd = new scala.util.Random(7L)
     val base = Seq.fill(64)(rnd.nextGaussian())
@@ -495,7 +494,7 @@ class StreamingSurfaceSpec extends SparkSpec {
             Option(r.get(r.fieldIndex(s"band_$b"))).map(_.asInstanceOf[Long]))
             .toSet
         }.toMap
-    val dir = java.nio.file.Files.createTempDirectory("swembdedup").toString
+    val dir = tempDir("swembdedup")
     val tableDir = s"$dir/corpus.docs"
     val rnd = new scala.util.Random(11L)
     val base = Seq.fill(64)(rnd.nextGaussian())
@@ -556,7 +555,7 @@ class StreamingSurfaceSpec extends SparkSpec {
   test("band index bounds the per-epoch state read to the batch's touched buckets") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("banddex").toString
+    val dir = tempDir("banddex")
     val tableDir = s"$dir/corpus.docs"
     val rows = Seq(
       (1L, (1 to 24).map(i => s"aa$i").mkString(" ")),
@@ -634,7 +633,7 @@ class StreamingSurfaceSpec extends SparkSpec {
   test("in-loop table compaction: self-maintaining ingest keeps manifests bounded, dedup state intact") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sndtc").toString
+    val dir = tempDir("sndtc")
     val tableDir = s"$dir/corpus.docs"
     val mk = (seed: Int) => (100 to 123).map(i => s"w$seed-$i").mkString(" ")
     val rows = Seq(
@@ -672,7 +671,7 @@ class StreamingSurfaceSpec extends SparkSpec {
   test("in-loop compaction faults: a held lock skips the cycle, the stream survives and compacts later; persistent faults escalate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sndfault").toString
+    val dir = tempDir("sndfault")
     val tableDir = s"$dir/corpus.docs"
     val fs = new org.apache.hadoop.fs.Path(tableDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -707,7 +706,7 @@ class StreamingSurfaceSpec extends SparkSpec {
     // lock contention held across MANY cycles is coordination, not a
     // fault: it must never escalate (an external compactor legitimately
     // spans epochs; a crash leftover heals on the lock's own 30-min clock)
-    val dir2 = java.nio.file.Files.createTempDirectory("sndfault2").toString
+    val dir2 = tempDir("sndfault2")
     val tableDir2 = s"$dir2/corpus.docs"
     val lock2 = new org.apache.hadoop.fs.Path(tableDir2,
       s"${graft.sink.CommitLog.COMMITS_DIR}/.compaction.lock")
@@ -731,7 +730,7 @@ class StreamingSurfaceSpec extends SparkSpec {
     // trash ledger — a directory where a file must be — that every cycle
     // trips over) fails the query after MaxCompactionFailures consecutive
     // cycles instead of silently never compacting again
-    val dir3 = java.nio.file.Files.createTempDirectory("sndfault3").toString
+    val dir3 = tempDir("sndfault3")
     val tableDir3 = s"$dir3/corpus.docs"
     val badTrash = new org.apache.hadoop.fs.Path(tableDir3,
       s"${graft.sink.CommitLog.COMMITS_DIR}/.trash-1-corrupt")
@@ -763,7 +762,7 @@ class StreamingSurfaceSpec extends SparkSpec {
     // first-arrival policy
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sneardedup500").toString
+    val dir = tempDir("sneardedup500")
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
       .select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1)
     assert(docs.length == 500)
@@ -793,7 +792,7 @@ class StreamingSurfaceSpec extends SparkSpec {
   test("continuous trigger e2e: rate source -> graft sink, rows land exactly-once " +
       "(reference RateStreamingExample.scala:81)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-continuous").toString
+    val dir = tempDir("graft-continuous")
     // the reference demonstrates Trigger.Continuous(3000) into its sink;
     // prove the graft sink under the same execution mode: continuous
     // epochs call the SAME StreamingWrite.commit(epochId, _) contract the
@@ -873,7 +872,7 @@ class StreamingSurfaceSpec extends SparkSpec {
       "north-star pipeline lands exactly-once " +
       "(HiveStreamingExample.scala:63-80)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-socket").toString
+    val dir = tempDir("graft-socket")
     val server = new java.net.ServerSocket(0)
     val port = server.getLocalPort
     val writer = new Thread(() => {

@@ -132,7 +132,7 @@ class TrainPrepSpec extends SparkSpec {
   test("clustering a corpus with no near-dups yields an empty result, not a hang") {
     // all-distinct texts: no shared 3-gram, so the pair graph is empty and
     // label propagation must exit on its first fixpoint check
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nodups").toString
+    val tmp = tempDir("graft_nodups")
     import spark.implicits._
     (0 until 20).map { i =>
       (i.toLong, "en", 100, (0 until 10).map(j => s"w${i * 100 + j}").mkString(" "))
@@ -286,7 +286,7 @@ class TrainPrepSpec extends SparkSpec {
     // consecutive spaces produce empty tokens — counted identically by
     // Spark split and DuckDB string_split, so the operator must not
     // special-case them away
-    val tmp = java.nio.file.Files.createTempDirectory("graft_degen").toString
+    val tmp = tempDir("graft_degen")
     import spark.implicits._
     Seq(
       (0L, Seq.fill(25)("w").mkString(" "), "en", "web", 49L),

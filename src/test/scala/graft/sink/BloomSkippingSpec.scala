@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
@@ -18,7 +16,7 @@ import graft.SparkSpec
 class BloomSkippingSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-bloom").toString
+    tempDir("graft-bloom")
 
   private def opts(path: String, extra: (String, String)*): Map[String, String] =
     Map("path" -> path, "db" -> "testdb", "table" -> "t",

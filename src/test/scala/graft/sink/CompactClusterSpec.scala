@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.sources.EqualTo
@@ -21,7 +19,7 @@ import graft.SparkSpec
 class CompactClusterSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-cluster").toString
+    tempDir("graft-cluster")
 
   private def opts(path: String, extra: (String, String)*): Map[String, String] =
     (Map("path" -> path, "db" -> "testdb", "table" -> "t",

@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.sources._
 
@@ -18,7 +16,7 @@ import graft.SparkSpec
 class FileSkippingSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-skip").toString
+    tempDir("graft-skip")
 
   private def opts(path: String, extra: (String, String)*): Map[String, String] =
     Map("path" -> path, "db" -> "testdb", "table" -> "t",

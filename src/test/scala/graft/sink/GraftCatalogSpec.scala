@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.connector.catalog.Identifier
 
@@ -14,7 +12,7 @@ import graft.SparkSpec
 class GraftCatalogSpec extends SparkSpec {
 
   private lazy val warehouse = {
-    val dir = Files.createTempDirectory("graft-warehouse").toString
+    val dir = tempDir("graft-warehouse")
     spark.conf.set("spark.sql.catalog.gtest", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gtest.path", dir)
     dir
@@ -67,7 +65,7 @@ class GraftCatalogSpec extends SparkSpec {
     spark.sql("CREATE TABLE gtest.db1.stream_t (id BIGINT, msg STRING)")
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Long]
-    val cp = Files.createTempDirectory("graft-cat-cp").toString
+    val cp = tempDir("graft-cat-cp")
     val q = in.toDS().map(i => (i, s"m$i")).toDF("id", "msg")
       .writeStream.option("checkpointLocation", cp)
       .toTable("gtest.db1.stream_t")

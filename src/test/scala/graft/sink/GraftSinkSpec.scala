@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -19,7 +17,7 @@ import graft.SparkSpec
 class GraftSinkSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-sink").toString
+    tempDir("graft-sink")
 
   private def opts(path: String, extra: (String, String)*): Map[String, String] =
     (Map("path" -> path, "db" -> "testdb", "table" -> "t") ++ extra.toMap)
@@ -57,7 +55,8 @@ class GraftSinkSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("keytab") || e2.getMessage.contains("Keytab"))
     // a readable keytab file parses cleanly (no KDC contact at parse time)
-    val kt = java.nio.file.Files.createTempFile("svc", ".keytab")
+    val kt = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(tempDir("graft-keytab"), "svc.keytab"))
     val ok = GraftSinkOptions.from(new CaseInsensitiveStringMap(
       (base + ("principal" -> "svc@REALM", "keytab" -> kt.toString)).asJava))
     assert(ok.principal.contains("svc@REALM"))
@@ -95,7 +94,8 @@ class GraftSinkSpec extends SparkSpec {
     // kerberos for just this window (restored in finally: UGI config is
     // JVM-global)
     import org.apache.hadoop.security.UserGroupInformation
-    val kt = java.nio.file.Files.createTempFile("fake", ".keytab")
+    val kt = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(tempDir("graft-keytab"), "fake.keytab"))
     java.nio.file.Files.write(kt, "not a keytab".getBytes)
     val opts = GraftSinkOptions.from(new CaseInsensitiveStringMap(
       Map("path" -> "/x", "db" -> "d", "table" -> "t",

@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -22,7 +20,7 @@ import graft.SparkSpec
 class OrcLandingSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-orc").toString
+    tempDir("graft-orc")
 
   private def opts(path: String, extra: (String, String)*): Map[String, String] =
     (Map("path" -> path, "db" -> "testdb", "table" -> "t",

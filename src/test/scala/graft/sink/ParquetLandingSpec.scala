@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -21,7 +19,7 @@ import graft.SparkSpec
 class ParquetLandingSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-parquet").toString
+    tempDir("graft-parquet")
 
   private def opts(path: String, extra: (String, String)*): Map[String, String] =
     (Map("path" -> path, "db" -> "testdb", "table" -> "t",

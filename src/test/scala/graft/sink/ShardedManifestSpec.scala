@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -24,7 +22,7 @@ class ShardedManifestSpec extends SparkSpec {
 
   private def conf = spark.sparkContext.hadoopConfiguration
   private def tmpTable(): String =
-    s"${Files.createTempDirectory("graft-shard")}/testdb.t"
+    s"${tempDir("graft-shard")}/testdb.t"
 
   /** `nParts` partition dirs × `perPart` files, every file with stats. */
   private def syntheticCommit(log: CommitLog, tableDir: String,
@@ -250,7 +248,7 @@ class ShardedManifestSpec extends SparkSpec {
     try {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val root = Files.createTempDirectory("graft-shardtail").toString
+      val root = tempDir("graft-shardtail")
       val in = MemoryStream[Int]
       val writer = in.toDS().map(i => (i.toLong, s"c${i % 6}", s"m$i"))
         .toDF("id", "cat", "msg")
@@ -293,7 +291,7 @@ class ShardedManifestSpec extends SparkSpec {
     try {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val root = Files.createTempDirectory("graft-sharde2e").toString
+      val root = tempDir("graft-sharde2e")
       val in = MemoryStream[Int]
       val q = in.toDS().map(i => (i.toLong, s"m$i", s"c${i % 6}"))
         .toDF("id", "msg", "cat")

@@ -1,7 +1,5 @@
 package graft.sink
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -21,7 +19,7 @@ import graft.SparkSpec
   */
 class TaskConfSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graft-taskconf").toString
+  private def tmp(): String = tempDir("graft-taskconf")
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType), StructField("msg", StringType)))
