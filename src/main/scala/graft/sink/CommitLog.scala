@@ -37,8 +37,6 @@ final class CommitLog(tableDir: String, conf: Configuration) {
   def manifestPath(epochId: Long): Path =
     new Path(commitsDir, s"epoch-$epochId.manifest")
 
-  def isCommitted(epochId: Long): Boolean = fs.exists(manifestPath(epochId))
-
   /** Publish `files` for `epochId`. Returns true if this call committed,
     * false if the epoch was already committed (replay → caller must discard
     * the replayed files).
@@ -275,16 +273,7 @@ final class CommitLog(tableDir: String, conf: Configuration) {
           .map { s => val Array(k, v) = s.split("=", 2); k -> v }.toMap
         CommitLog.ShardRef(toks(0), parts)
     }
-    val inlineLines = lines.filterNot(_.startsWith("#"))
-    // resolve recorded (relative) paths to absolute HERE so every
-    // downstream consumer — scan planning, partition restoration,
-    // deletion, stats keys — sees the same absolute strings it always did
-    val files = inlineLines.map(l => resolvePath(l.takeWhile(_ != '\t')))
-    val stats = inlineLines.flatMap { l =>
-      val toks = l.split('\t')
-      if (toks.length < 2) None
-      else FileStats.parse(toks.drop(1).toSeq).map(resolvePath(toks(0)) -> _)
-    }.toMap
+    val (files, stats) = parseFileLines(lines.filterNot(_.startsWith("#")))
     val header = Manifest(epochId, files, supersedes, watermark, ceiling,
       stats, shardRefs)
     if (!resolveShards || shardRefs.isEmpty) Some(header)
@@ -322,39 +311,30 @@ final class CommitLog(tableDir: String, conf: Configuration) {
           }
         t.split("\n").filter(_.nonEmpty).toSeq
       }
-    val files = shardLines.map(l => resolvePath(l.takeWhile(_ != '\t')))
-    val stats = shardLines.flatMap { l =>
+    val (files, stats) = parseFileLines(shardLines)
+    Some(m.copy(files = m.files ++ files, fileStats = m.fileStats ++ stats))
+  }
+
+  /** File lines of a manifest or shard: a recorded path, optionally
+    * followed by tab-separated [[FileStats]] fields. Recorded (relative)
+    * paths resolve to absolute HERE so every downstream consumer — scan
+    * planning, partition restoration, deletion, stats keys — sees the same
+    * absolute strings it always did.
+    */
+  private def parseFileLines(lines: Seq[String]): (Seq[String], Map[String, FileStats]) = {
+    val files = lines.map(l => resolvePath(l.takeWhile(_ != '\t')))
+    val stats = lines.flatMap { l =>
       val toks = l.split('\t')
       if (toks.length < 2) None
       else FileStats.parse(toks.drop(1).toSeq).map(resolvePath(toks(0)) -> _)
     }.toMap
-    Some(m.copy(files = m.files ++ files, fileStats = m.fileStats ++ stats))
-  }
-
-  /** Every readable manifest, superseded ones included.
-    * `partitionPredicates` (equality on partition columns) prunes whole
-    * shards of sharded manifests before parsing — the returned manifests'
-    * `files` then cover only partitions the predicates allow.
-    */
-  def allManifests(
-      partitionPredicates: Seq[(String, String)] = Seq.empty): Seq[Manifest] = {
-    val f = fs
-    if (!f.exists(commitsDir)) return Seq.empty
-    f.listStatus(commitsDir).toSeq
-      .flatMap { st =>
-        st.getPath.getName match {
-          case CommitLog.ManifestName(id) =>
-            readManifest(id.toLong, st.getPath,
-              partitionPredicates = partitionPredicates)
-          case _ => None
-        }
-      }
+    (files, stats)
   }
 
   /** The parsed negative (compaction/batch) manifests only — the files
     * that can carry `#supersedes:` / `#tombstone_ceiling:`. Opens just
     * those few (tier-ladder-bounded) files; per-epoch callers must use
-    * this, never a full allManifests() parse.
+    * this, never a parse of every manifest.
     */
   private def negativeManifests(): Seq[Manifest] = {
     val f = fs
@@ -385,11 +365,6 @@ final class CommitLog(tableDir: String, conf: Configuration) {
       })
   }
 
-  /** All live manifests, with compaction-superseded ones removed — by
-    * explicit supersedes id, or (for streaming epochs) by falling under a
-    * tombstone ceiling: a positive leftover ≤ some manifest's ceiling is a
-    * consumed epoch whose cleanup crashed, and must stay dead.
-    */
   /** The liveness filter shared by [[manifests]] and
     * [[manifestsSelective]]: drop manifests superseded by id and
     * streaming epochs under any tombstone ceiling (a consumed epoch whose

@@ -477,7 +477,7 @@ object Compact {
           // split at the size target
           val targets = ParquetIO.merge(files.map(new Path(_)),
             i => { val t = new Path(dir, s"$stem-$i.parquet"); written += t; t },
-            fs.getConf, targetFileBytes)
+            dataFs, fs.getConf, targetFileBytes)
           // re-derive column stats from the consolidated footer (appendFile
           // carries the input row groups' stats through) so plan-time file
           // skipping survives compaction; one metadata read per output
@@ -501,7 +501,7 @@ object Compact {
           // concat), one output per (file schema × size chunk)
           val (targets, consumed) = OrcIO.merge(files.map(new Path(_)),
             i => { val t = new Path(dir, s"$stem-$i.orc"); written += t; t },
-            fs.getConf, targetFileBytes)
+            dataFs, fs.getConf, targetFileBytes)
           // every input must end up superseded (publish deletes them all):
           // a file the merger declined (foreign writer version /
           // compression) is byte-copied to a fresh target instead
@@ -510,7 +510,7 @@ object Compact {
             val t = new Path(dir, s"$stem-c${written.size}.orc")
             written += t
             org.apache.hadoop.fs.FileUtil.copy(
-              fs, new Path(f), fs, t, false, fs.getConf)
+              fs, new Path(f), dataFs, t, false, fs.getConf)
             t
           }
           val outputs = targets ++ carried

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Shell
 
 /** Decides which file system the sink creates its landed data files (and
-  * their partition directories) and Compact's JSONL outputs through.
+  * their partition directories) and Compact.run's outputs through.
   *
   *  - A checksummed fs is bypassed for its raw fs: `ChecksumFileSystem`'s
   *    output stream never propagates `flush()` (so the keep-alive could
@@ -24,9 +24,7 @@ import org.apache.hadoop.util.Shell
   *    subclass — is used as configured.
   *
   * Manifests, shards, bloom sidecars and table metadata stay on the
-  * checksummed fs: their `.crc` is checked on read. Compact's parquet and
-  * ORC merge outputs and the files it carries over unchanged are still
-  * written through the checksummed fs too.
+  * checksummed fs: their `.crc` is checked on read.
   */
 object DataFs {
 

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
@@ -28,11 +28,12 @@ final case class GraftCommitMessage(files: Seq[String], rows: Long,
   *  - Encoding: [[JsonRowEncoder]] over the non-partition columns
   *    (reference `:96-100`; partition values live in the directory path,
   *    Hive-style).
-  *  - Batching: rows are buffered and flushed every `batch.size` rows
-  *    (reference commits a Hive txn per `batch.size` rows, `:102-105`);
-  *    after `txn.per.batch` flushes the file is rotated, bounding file size
-  *    the way the reference bounds a TransactionBatch
-  *    (`HiveWriter.scala:86-91`).
+  *  - Batching: JSONL rows are buffered and flushed every `batch.size`
+  *    rows (reference commits a Hive txn per `batch.size` rows,
+  *    `:102-105`). Every landing rotates its file at `batch.size ×
+  *    txn.per.batch` rows, bounding file size the way the reference bounds
+  *    a TransactionBatch (`HiveWriter.scala:86-91`); a keep-alive flush
+  *    does not count toward it.
   *
   * Durability model (deliberate upgrade): files become visible only through
   * the driver's epoch manifest ([[CommitLog]]), so a task that dies
@@ -85,48 +86,6 @@ final class GraftDataWriter(
     */
   private lazy val dataFs: FileSystem = DataFs.resolve(fs)
 
-  /** One open segment per partition spec (reference's per-task writer map,
-    * `HiveStreamDataWriter.scala:44,82-94`). Two landings share the
-    * lifecycle (lazy open, size-bounded rotation, commit-close,
-    * abort-discard): JSONL text (default, the reference's row-JSON shape)
-    * and columnar parquet ([[ParquetIO]], the reference's ORC analogue).
-    */
-  private sealed trait Segment {
-    def write(row: InternalRow): Unit
-    def close(): Unit
-    def discard(): Unit
-    /** Push buffered rows toward durability mid-epoch (A11 keep-alive). */
-    def heartbeatFlush(): Unit
-
-    /** Bloom sidecar accumulator ([[Bloom.Running]]), shared by all three
-      * landings: observe the FULL row (pre-projection — bloom columns
-      * resolve against the stream schema) per write, snapshot to
-      * `<file>.bloom` at every file close/rotation.
-      */
-    protected val bloom: Option[Bloom.Running] =
-      if (opts.bloomColumns.isEmpty) None
-      else Some(new Bloom.Running(schema, opts.bloomColumns, opts.bloomBits))
-
-    protected def writeBloomSidecar(dataFile: String): Unit =
-      bloom.foreach(b => Bloom.write(fs, dataFile, b.snapshotAndReset()))
-  }
-
-  // Columnar segments' per-writer state, built once per writer rather than
-  // once per partition directory. One projection serves every segment:
-  // each write consumes its projected row before the next call. The pinned
-  // parquet conf is a full Configuration copy, fixed with the schema.
-  private lazy val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
-  private lazy val dataProjection =
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
-        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
-  private lazy val parquetConf = ParquetIO.pinnedWriterConf(conf, dataSchema)
-
-  private def newSegment(partDir: String): Segment =
-    if (opts.isParquet) new ParquetSegment(partDir)
-    else if (opts.isOrc) new OrcSegment(partDir)
-    else new JsonlSegment(partDir)
-
   private def segmentDir(partDir: String): Path = {
     val dir = if (partDir.isEmpty) tablePath else new Path(tablePath, partDir)
     if (!opts.autoCreatePartitions && partDir.nonEmpty && !dataFs.exists(dir)) {
@@ -143,203 +102,156 @@ final class GraftDataWriter(
   private def segmentFile(dir: Path, seq: Int, ext: String): Path =
     new Path(dir, f"part-e$epochId-p$partitionId%05d-t$taskId-$uid-$seq%04d.$ext")
 
-  /** Columnar landing: rows stream into a snappy parquet file through
-    * Spark's own `InternalRow` write support. Batching differs from JSONL
-    * by necessity — a parquet file cannot flush mid-write (pages live in
-    * the writer's buffer until a row group completes), so `batch.size ×
-    * txn.per.batch` bounds ROWS PER FILE (the same rotation ceiling the
-    * JSONL path reaches via flushes-per-file) and the keep-alive is a
-    * no-op.
+  /** One open segment per partition spec (reference's per-task writer map,
+    * `HiveStreamDataWriter.scala:44,82-94`), with one lifecycle for all
+    * three landings: the file opens on the first write, closes once it
+    * holds `batch.size × txn.per.batch` rows (the next write opens the
+    * next one, so no empty trailing file appears), records its stats and
+    * bloom sidecar at close, and is aborted on discard.
     */
-  private final class ParquetSegment(partDir: String) extends Segment {
-    private val project = dataProjection
+  private final class Segment(partDir: String) {
     private val maxRowsPerFile = opts.batchSize.toLong * opts.txnPerBatch
-    private val pinned = parquetConf
-    private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-    private var file: Path = _
+    /** Bloom sidecar accumulator ([[Bloom.Running]]): observes the FULL
+      * row (pre-projection — bloom columns resolve against the stream
+      * schema) per write, snapshot to `<file>.bloom` at every file close.
+      */
+    private val bloom: Option[Bloom.Running] =
+      if (opts.bloomColumns.isEmpty) None
+      else Some(new Bloom.Running(schema, opts.bloomColumns, opts.bloomBits))
+    private var file: DataFile = _
+    private var path: Path = _
     private var rowsInFile = 0L
     private var seq = 0
 
-    private def open(): Unit = {
-      file = segmentFile(segmentDir(partDir), seq, "parquet")
-      // like the ORC landing: bloom.columns also records native
-      // per-row-group blooms (partition columns are path-only, filtered)
-      writer = ParquetIO.createWriter(file, dataFs, pinned,
-        bloomColumns = opts.bloomColumns.filter(dataSchema.fieldNames.contains))
-      seq += 1
-      rowsInFile = 0L
-      files += file.toString
-    }
-
-    /** Close the open file and record its column stats from the footer the
-      * writer just built in memory — zero extra IO, and the stats land in
-      * the epoch manifest for plan-time file skipping.
-      */
-    private def closeFile(): Unit = {
-      writer.close()
-      statsByFile(file.toString) =
-        FileStats.fromFooter(writer.getFooter).serialize
-      writeBloomSidecar(file.toString)
-      writer = null
-    }
-
-    override def write(row: InternalRow): Unit = {
-      if (writer == null) open()
-      writer.write(project(row))
+    def write(row: InternalRow): Unit = {
+      if (file == null) {
+        path = segmentFile(segmentDir(partDir), seq, opts.format)
+        file = openFile(path)
+        seq += 1
+        rowsInFile = 0L
+        files += path.toString
+      }
+      file.write(row)
       bloom.foreach(_.observe(row))
       rowsInFile += 1
-      if (rowsInFile >= maxRowsPerFile) closeFile()
+      if (rowsInFile >= maxRowsPerFile) close()
     }
 
-    override def close(): Unit =
-      if (writer != null) closeFile()
+    def close(): Unit = if (file != null) {
+      statsByFile(path.toString) = file.close()
+      bloom.foreach(b => Bloom.write(fs, path.toString, b.snapshotAndReset()))
+      file = null
+    }
 
-    override def discard(): Unit =
-      if (writer != null) {
-        try writer.close() catch { case _: Throwable => }
-        writer = null
-      }
+    def discard(): Unit = if (file != null) {
+      file.abort()
+      file = null
+    }
 
-    override def heartbeatFlush(): Unit = ()
+    def hflush(): Unit = if (file != null) file.hflush()
+  }
+
+  /** One open data file of the landing format. */
+  private trait DataFile {
+    def write(row: InternalRow): Unit
+    /** Close the file and return its serialized [[FileStats]]. */
+    def close(): String
+    /** Abort path: release the file, dropping buffered rows and swallowing
+      * errors (the writer's abort deletes the file afterwards).
+      */
+    def abort(): Unit
+    /** Make buffered rows visible mid-file (A11 keep-alive); only the
+      * JSONL file can, as columnar files buffer until a row group or
+      * stripe completes (keep-alive is rejected for them at option parse).
+      */
+    def hflush(): Unit = ()
+  }
+
+  private def openFile(path: Path): DataFile =
+    if (opts.isParquet) new ParquetFile(path)
+    else if (opts.isOrc) new OrcFile(path)
+    else new JsonlFile(path)
+
+  // Columnar files' per-writer state, built once per writer rather than
+  // once per file. One projection serves every file: each write consumes
+  // its projected row before the next call. The pinned parquet conf is a
+  // full Configuration copy, fixed with the schema.
+  private lazy val dataSchema = StructType(dataIdx.map(schema(_)).toArray)
+  private lazy val dataProjection =
+    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(dataIdx.map(i => org.apache.spark.sql.catalyst.expressions
+        .BoundReference(i, schema(i).dataType, nullable = true)).toArray)
+  private lazy val parquetConf = ParquetIO.pinnedWriterConf(conf, dataSchema)
+
+  /** Columnar landing: snappy parquet through Spark's own `InternalRow`
+    * write support; the column stats come from the footer the writer just
+    * built in memory at close — zero extra IO.
+    */
+  private final class ParquetFile(path: Path) extends DataFile {
+    // like the ORC landing: bloom.columns also records native
+    // per-row-group blooms (partition columns are path-only, filtered)
+    private val writer = ParquetIO.createWriter(path, dataFs, parquetConf,
+      bloomColumns = opts.bloomColumns.filter(dataSchema.fieldNames.contains))
+    private val project = dataProjection
+    override def write(row: InternalRow): Unit = writer.write(project(row))
+    override def close(): String = {
+      writer.close()
+      FileStats.fromFooter(writer.getFooter).serialize
+    }
+    override def abort(): Unit = try writer.close() catch { case _: Throwable => }
   }
 
   /** ORC landing — the reference's LITERAL storage format (`stored as
-    * orc`, `HiveStreamingExample.scala:26-31`). Same lifecycle as the
-    * parquet segment: size-bounded rotation by rows-per-file, stats from
-    * the writer's in-memory file statistics at close, no mid-file flush
-    * (keep-alive is rejected at option parse).
+    * orc`, `HiveStreamingExample.scala:26-31`); stats come from the
+    * writer's in-memory file statistics at close.
     */
-  private final class OrcSegment(partDir: String) extends Segment {
+  private final class OrcFile(path: Path) extends DataFile {
+    private val writer = new OrcIO.RowWriter(path, dataFs, dataSchema, conf,
+      bloomColumns = opts.bloomColumns)
     private val project = dataProjection
-    private val maxRowsPerFile = opts.batchSize.toLong * opts.txnPerBatch
-    private var writer: OrcIO.RowWriter = _
-    private var file: Path = _
-    private var rowsInFile = 0L
-    private var seq = 0
-
-    private def open(): Unit = {
-      file = segmentFile(segmentDir(partDir), seq, "orc")
-      writer = new OrcIO.RowWriter(file, dataFs, dataSchema, conf,
-        bloomColumns = opts.bloomColumns)
-      seq += 1
-      rowsInFile = 0L
-      files += file.toString
-    }
-
-    private def closeFile(): Unit = {
-      statsByFile(file.toString) = writer.closeWithStats()
-      writeBloomSidecar(file.toString)
-      writer = null
-    }
-
-    override def write(row: InternalRow): Unit = {
-      if (writer == null) open()
-      writer.write(project(row))
-      bloom.foreach(_.observe(row))
-      rowsInFile += 1
-      if (rowsInFile >= maxRowsPerFile) closeFile()
-    }
-
-    override def close(): Unit =
-      if (writer != null) closeFile()
-
-    override def discard(): Unit =
-      if (writer != null) {
-        writer.abort()
-        writer = null
-      }
-
-    override def heartbeatFlush(): Unit = ()
+    override def write(row: InternalRow): Unit = writer.write(project(row))
+    override def close(): String = writer.closeWithStats()
+    override def abort(): Unit = writer.abort()
   }
 
-  private final class JsonlSegment(partDir: String) extends Segment {
-    var file: Path = _
-    var out: FSDataOutputStream = _
-    // 64 KiB row buffers are recycled across tasks/epochs through the
-    // executor-singleton pool — the reference's writer-reuse pattern
-    // (CachedHiveWriters) applied to the resource that is actually
-    // long-lived here (the per-epoch files themselves must close at commit)
-    val buf: StringBuilder = GraftDataWriter.bufferPool.getOrCreate(GraftDataWriter.BufKey)
-    private var recycled = false
-    // per-file column stats for manifest-level skipping — the encoder walks
-    // every value anyway; parquet segments get these from the footer
+  /** JSONL landing (default, the reference's row-JSON shape): rows buffer
+    * as text and reach the stream every `batch.size` rows. Column stats
+    * are gathered while encoding — the encoder walks every value anyway.
+    */
+  private final class JsonlFile(path: Path) extends DataFile {
+    private val out = dataFs.create(path, false)
+    private val buf = new StringBuilder
     private val stats = new FileStats.Running(schema, dataIdx)
-    private var rowsInFile = 0L
-    var rowsInBuf = 0
-    var flushes = 0
-    var seq = 0
-
-    def open(): Unit = {
-      file = segmentFile(segmentDir(partDir), seq, "jsonl")
-      out = dataFs.create(file, false)
-      seq += 1
-      flushes = 0
-      rowsInFile = 0L
-      files += file.toString
-    }
+    private var rows = 0L
+    private var rowsInBuf = 0
 
     override def write(row: InternalRow): Unit = {
-      if (out == null) open()
       encoder.encode(row, buf)
       buf.append('\n')
       stats.observe(row)
-      bloom.foreach(_.observe(row))
-      rowsInFile += 1
+      rows += 1
       rowsInBuf += 1
       if (rowsInBuf >= opts.batchSize) flush()
     }
 
-    def flush(): Unit = if (rowsInBuf > 0) {
+    private def flush(): Unit = if (rowsInBuf > 0) {
       out.write(buf.toString.getBytes(StandardCharsets.UTF_8))
       buf.clear()
       rowsInBuf = 0
-      flushes += 1
-      if (flushes >= opts.txnPerBatch) rotate()
     }
 
-    // lazy rotation: close now, reopen on the next write — avoids trailing
-    // empty files when the batch ends exactly on a rotation boundary
-    def rotate(): Unit = {
-      out.close(); out = null
-      statsByFile(file.toString) = stats.snapshotAndReset(rowsInFile)
-      writeBloomSidecar(file.toString)
-    }
-
-    override def close(): Unit = {
+    override def hflush(): Unit = {
       flush()
-      if (out != null) {
-        out.close(); out = null
-        statsByFile(file.toString) = stats.snapshotAndReset(rowsInFile)
-        writeBloomSidecar(file.toString)
-      }
-      recycleBuf()
+      out.hflush()
     }
 
-    override def heartbeatFlush(): Unit = if (out != null) {
+    override def close(): String = {
       flush()
-      // flush() may have rotated (lazy rotation nulls the stream)
-      if (out != null) out.hflush()
+      out.close()
+      stats.snapshotAndReset(rows)
     }
 
-    /** Abort path: drop buffered rows and close WITHOUT flushing, so the
-      * mandatory `DataWriter.close()` after `abort()` cannot write into a
-      * closed stream.
-      */
-    override def discard(): Unit = {
-      rowsInBuf = 0
-      buf.clear()
-      if (out != null) {
-        try out.close() catch { case _: Throwable => }
-        out = null
-      }
-      recycleBuf()
-    }
-
-    private def recycleBuf(): Unit = if (!recycled) {
-      recycled = true
-      buf.clear()
-      GraftDataWriter.bufferPool.recycle(GraftDataWriter.BufKey, buf)
-    }
+    override def abort(): Unit = try out.close() catch { case _: Throwable => }
   }
 
   private val segments = mutable.HashMap.empty[String, Segment]
@@ -381,7 +293,7 @@ final class GraftDataWriter(
         })
       ex.scheduleWithFixedDelay(() => try {
         GraftDataWriter.this.synchronized {
-          segments.values.foreach(_.heartbeatFlush())
+          segments.values.foreach(_.hflush())
         }
       } catch {
         case t: Throwable => logWarning("keep-alive flush failed", t)
@@ -392,7 +304,7 @@ final class GraftDataWriter(
 
   override def write(row: InternalRow): Unit = synchronized {
     val dir = partDirFor(row)
-    segments.getOrElseUpdate(dir, newSegment(dir)).write(row)
+    segments.getOrElseUpdate(dir, new Segment(dir)).write(row)
     rowCount += 1
   }
 
@@ -430,16 +342,4 @@ final class GraftDataWriter(
     heartbeat.foreach(_.shutdown())
     segments.values.foreach(_.close())
   }
-}
-
-object GraftDataWriter {
-  private[sink] val BufKey = "row-buffer"
-
-  /** Executor-singleton pool of row buffers, expiring idle entries after
-    * 10 minutes — the reference's `CachedHiveWriters` lifecycle
-    * (getOrCreate/recycle/timed sweep/shutdown hook) on the JVM-long-lived
-    * resource of this sink.
-    */
-  private[sink] val bufferPool =
-    new WriterPool[String, StringBuilder](_ => new StringBuilder(1 << 16), _ => ())
 }

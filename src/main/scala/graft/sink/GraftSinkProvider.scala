@@ -83,34 +83,32 @@ object SchemaRegistry {
     val p = schemaPath(opts)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(DataTypeUtils.fromJson(new String(bytes.toByteArray, "UTF-8")))
-      } finally in.close()
-    }
+    else Some(DataTypeUtils.fromJson(CommitLog.readFully(fs, p)))
   }
 
-  def saveIfAbsent(opts: GraftSinkOptions, schema: StructType): Unit = {
-    val p = schemaPath(opts)
+  /** Write `content` to `p` unless a record is already there: write-temp +
+    * rename, so no reader or racer ever observes a partial file. Returns
+    * true when this write lost the rename race to a concurrent first
+    * writer; the caller then validates its own record against the
+    * winner's instead of failing the stream. The target is re-checked
+    * right before the rename because the local file system's rename
+    * REPLACES an existing target.
+    */
+  private def lostWriteOnce(p: Path, tmpPrefix: String, content: String): Boolean = {
     val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) return
+    if (fs.exists(p)) return false
     fs.mkdirs(p.getParent)
-    // write-temp + rename so no reader/racer ever observes a partial file;
-    // losing the rename race means a concurrent first writer won — validate
-    // our schema against the winner's instead of failing the stream
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".schema.${java.util.UUID.randomUUID}.tmp")
+    val tmp = new Path(p.getParent, s".$tmpPrefix.${java.util.UUID.randomUUID}.tmp")
     val out = fs.create(tmp, false)
-    try out.write(schema.json.getBytes("UTF-8"))
+    try out.write(content.getBytes("UTF-8"))
     finally out.close()
     val won = !fs.exists(p) && fs.rename(tmp, p)
-    if (!won) {
-      fs.delete(tmp, false)
+    if (!won) fs.delete(tmp, false)
+    !won
+  }
+
+  def saveIfAbsent(opts: GraftSinkOptions, schema: StructType): Unit =
+    if (lostWriteOnce(schemaPath(opts), "schema", schema.json)) {
       load(opts).foreach { winner =>
         val want = winner.fields.map(_.name).toSet
         val got = schema.fields.map(_.name).toSet
@@ -122,7 +120,6 @@ object SchemaRegistry {
         }
       }
     }
-  }
 
   private object DataTypeUtils {
     def fromJson(json: String): StructType =
@@ -147,19 +144,11 @@ object SchemaRegistry {
       .filter(_.nonEmpty).toSeq)
   }
 
-  def savePartitioningIfAbsent(opts: GraftSinkOptions, cols: Seq[String]): Unit = {
-    val p = partitioningPath(opts)
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) return
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".partitioning.${java.util.UUID.randomUUID}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(cols.mkString(",").getBytes("UTF-8"))
-    finally out.close()
-    // losing the rename race means a concurrent first writer won; the
-    // caller re-validates against the winner's record
-    if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-  }
+  /** Losing the write race means a concurrent first writer won; the
+    * caller re-validates against the winner's record.
+    */
+  def savePartitioningIfAbsent(opts: GraftSinkOptions, cols: Seq[String]): Unit =
+    lostWriteOnce(partitioningPath(opts), "partitioning", cols.mkString(","))
 
   /** Resolve the effective partition columns for a write: an explicit
     * `partition.columns` is validated against the recorded layout (first

@@ -184,8 +184,6 @@ object OrcIO {
       batch.reset()
     }
 
-    def rowCount: Long = rows
-
     /** Close and return the file's serialized column stats, mapped from
       * the writer's in-memory file statistics — zero extra IO, the ORC
       * analogue of `FileStats.fromFooter`.
@@ -442,11 +440,12 @@ object OrcIO {
     * each group size-bounded into chunks on input boundaries, and each
     * chunk merged via `OrcFile.mergeFiles`. A file the merger rejects
     * (incompatible compression/version) stays live unmerged rather than
-    * failing the cycle.
+    * failing the cycle. Outputs are created through `fs` ([[DataFs]]).
     *
     * @return (written target paths, input paths actually consumed)
     */
-  def merge(inputs: Seq[Path], targetFor: Int => Path, conf: Configuration,
+  def merge(inputs: Seq[Path], targetFor: Int => Path,
+      fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
       targetBytes: Long = Long.MaxValue): (Seq[Path], Seq[Path]) = {
     require(inputs.nonEmpty, "nothing to merge")
     val bySchema = inputs.map { p =>
@@ -470,7 +469,7 @@ object OrcIO {
         outIdx += 1
         val target = targetFor(outIdx)
         val merged = OrcFile.mergeFiles(target,
-          OrcFile.writerOptions(conf).useUTCTimestamp(true),
+          OrcFile.writerOptions(conf).useUTCTimestamp(true).fileSystem(fs),
           chunk.map(_._1).asJava)
         written += target
         consumed ++= merged.asScala

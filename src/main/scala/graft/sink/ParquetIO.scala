@@ -71,8 +71,8 @@ object ParquetIO {
   }
 
   /** OutputFile over an EXPLICIT filesystem instead of
-    * `path.getFileSystem(conf)`, so segment writes go through the sink's
-    * data fs ([[DataFs]]). Measured on the streaming-segment shape (88 ×
+    * `path.getFileSystem(conf)`, so segment writes and merge outputs go
+    * through the sink's data fs ([[DataFs]]). Measured on the streaming-segment shape (88 ×
     * ~11 k-row files): the checksummed create+close is ~12 ms/file — the
     * dominant per-file cost, 3× the parquet encode itself — because every
     * segment becomes two files (data + .crc sidecar) plus redundant
@@ -240,13 +240,15 @@ object ParquetIO {
     *
     * @param targetFor output path for the i-th output file; called once
     *                  per (schema group × size chunk).
+    * @param fs the file system outputs are created through ([[DataFs]]).
     * @param targetBytes split threshold on accumulated compressed input
     *                    bytes (block sizes from the footers already in
     *                    hand); `Long.MaxValue` restores one-per-group.
     * @return the written file paths.
     */
   def merge(inputs: Seq[Path], targetFor: Int => Path,
-      conf: Configuration, targetBytes: Long = Long.MaxValue): Seq[Path] = {
+      fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
+      targetBytes: Long = Long.MaxValue): Seq[Path] = {
     require(inputs.nonEmpty, "nothing to merge")
     val byFooter = inputs
       .map(p => p -> ParquetFileReader.readFooter(
@@ -270,9 +272,9 @@ object ParquetIO {
         outIdx += 1
         val target = targetFor(outIdx)
         val footer = chunk.head._2
-        val writer = new ParquetFileWriter(
-          conf, footer.getFileMetaData.getSchema, target,
-          ParquetFileWriter.Mode.CREATE)
+        val writer = new ParquetFileWriter(new FsOutputFile(fs, target),
+          footer.getFileMetaData.getSchema, ParquetFileWriter.Mode.CREATE,
+          ParquetWriter.DEFAULT_BLOCK_SIZE, ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
         writer.start()
         chunk.foreach { case (p, _) =>
           writer.appendFile(HadoopInputFile.fromPath(p, conf))

@@ -289,6 +289,51 @@ class GraftSinkSpec extends SparkSpec {
     w.commit()
   }
 
+  test("A11 keep-alive flushes do not count toward rotation: one file per " +
+      "batch.size × txn.per.batch rows") {
+    val dir = tmp()
+    val o = GraftSinkOptions.from(new CaseInsensitiveStringMap(
+      opts(dir, "batch.size" -> "1000000", "txn.per.batch" -> "2",
+        "keepalive.interval.ms" -> "100").asJava))
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("msg", StringType)))
+    val w = new GraftDataWriter(schema, o,
+      spark.sparkContext.hadoopConfiguration, 0, 1L, 1L)
+    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+    def write(ids: Range): Unit = ids.foreach { i =>
+      w.write(proj(org.apache.spark.sql.catalyst.InternalRow(
+        i, org.apache.spark.unsafe.types.UTF8String.fromString(s"msg-$i-" + "x" * 50))))
+    }
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def visibleBytes(): Long = {
+      val d = new org.apache.hadoop.fs.Path(s"$dir/testdb.t")
+      if (!fs.exists(d)) 0L
+      else fs.listStatus(d).filter(_.getPath.getName.startsWith("part-"))
+        .map(_.getLen).sum
+    }
+    def awaitVisibleAbove(floor: Long): Long = {
+      val deadline = System.currentTimeMillis() + 5000
+      while (visibleBytes() <= floor && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      val now = visibleBytes()
+      assert(now > floor, s"heartbeat should have flushed past $floor bytes")
+      now
+    }
+    // two heartbeat flushes of partial buffers, then one more row: a
+    // flush-counting rotation would have closed the file at the second
+    write(1 to 500)
+    val first = awaitVisibleAbove(0L)
+    write(501 to 1000)
+    awaitVisibleAbove(first)
+    write(1001 to 1001)
+    val msg = w.commit().asInstanceOf[GraftCommitMessage]
+    assert(msg.rows === 1001L)
+    assert(msg.files.size === 1, msg.files)
+    val text = CommitLog.readFully(fs, new org.apache.hadoop.fs.Path(msg.files.head))
+    assert(text.split("\n").count(_.nonEmpty) === 1001)
+  }
+
   test("read path: spark.read.format(graft-streaming) round-trips with pruning") {
     import spark.implicits._
     val dir = tmp()
@@ -1011,22 +1056,35 @@ class GraftSinkSpec extends SparkSpec {
 
   test("A7 batching: batch.size/txn.per.batch rotate files deterministically") {
     import spark.implicits._
-    val dir = tmp()
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Int]
-    // batch.size=10 rows per flush, txn.per.batch=2 flushes per file → 20
-    // rows per file; 100 rows in one micro-batch (single partition) → 5 files
-    val q = in.toDS().repartition(1).map(i => (i, s"m$i")).toDF("id", "msg")
-      .writeStream.format("graft-streaming")
-      .options(opts(dir, "batch.size" -> "10", "txn.per.batch" -> "2"))
-      .option("checkpointLocation", s"$dir/_cp")
-      .start()
-    in.addData(1 to 100: _*)
-    q.processAllAvailable()
-    q.stop()
-    val files = new CommitLog(s"$dir/testdb.t",
-      spark.sparkContext.hadoopConfiguration).committedFiles()
-    assert(files.size === 5, s"expected 5 rotated files, got ${files.size}")
-    assert(CommitLog.readCommitted(spark, s"$dir/testdb.t").count() === 100)
+    Seq("jsonl", "parquet", "orc").foreach { format =>
+      val dir = tmp()
+      val in = MemoryStream[Int]
+      // batch.size=10 × txn.per.batch=2 → 20 rows per file; 100 rows in
+      // one micro-batch (single partition) → 5 files, in every format
+      val q = in.toDS().repartition(1).map(i => (i, s"m$i")).toDF("id", "msg")
+        .writeStream.format("graft-streaming")
+        .options(opts(dir, "batch.size" -> "10", "txn.per.batch" -> "2",
+          "format" -> format))
+        .option("checkpointLocation", s"$dir/_cp")
+        .start()
+      in.addData(1 to 100: _*)
+      q.processAllAvailable()
+      q.stop()
+      val files = new CommitLog(s"$dir/testdb.t",
+        spark.sparkContext.hadoopConfiguration).committedFiles()
+      assert(files.size === 5, s"$format: expected 5 rotated files, got ${files.size}")
+      assert(files.forall(_.endsWith(s".$format")), files)
+      val rowsPerFile = files.map { f =>
+        val r = spark.read
+        (format match {
+          case "jsonl" => r.text(f)
+          case "parquet" => r.parquet(f)
+          case _ => r.orc(f)
+        }).count()
+      }
+      assert(rowsPerFile === Seq.fill(5)(20L), s"$format: $rowsPerFile")
+      assert(CommitLog.readCommitted(spark, s"$dir/testdb.t").count() === 100)
+    }
   }
 }

@@ -197,8 +197,9 @@ class WriterContractSpec extends graft.SparkSpec {
         .options(sinkOpts(s"$scheme://$dir", "format" -> format,
           "batch.size" -> "10", "txn.per.batch" -> "2"))
         .option("checkpointLocation", s"$dir/_cp").start()
-      try {
-        in.addData(1 to 100: _*)
+      // two epochs, so Compact.run below has manifests to fold
+      try Seq(1 to 50, 51 to 100).foreach { ids =>
+        in.addData(ids: _*)
         q.processAllAvailable()
       } finally q.stop()
       val listed = new CommitLog(s"$scheme://$dir/testdb.t", hconf).committedFiles()
@@ -212,6 +213,20 @@ class WriterContractSpec extends graft.SparkSpec {
       assert(createdData.size === listed.size, label)
       assert(createdData.sorted === listed.sorted, label)
       assert(!CreateProbeFs.created.asScala.exists(_.contains("/.part-")), label)
+      // Compact's merge outputs are data files too
+      if (format != "jsonl") {
+        CreateProbeFs.created.clear()
+        val table = s"$scheme://$dir/testdb.t"
+        assert(Compact.run(table, hconf, retainMillis = 0L).consolidatedFiles === 2, label)
+        val outputs = new CommitLog(table, hconf).committedFiles()
+          .map(f => new Path(f).toUri.getPath)
+        val createdOutputs = CreateProbeFs.created.asScala.toSeq
+          .filter(p => new Path(p).getName.startsWith("compact-"))
+        assert(outputs.forall(f => new Path(f).getName.startsWith("compact-")), label)
+        assert(createdOutputs.sorted === outputs.sorted, s"compact $label")
+        assert(!CreateProbeFs.created.asScala.exists(_.contains("/.compact-")),
+          s"compact $label")
+      }
     } finally keys.foreach(hconf.unset)
   }
 }
