@@ -391,7 +391,8 @@ object PqAdc {
   * `math.sqrt(c_nrm)` constant), strict `>` keeps the FIRST maximum —
   * exactly `array_position`'s first-match rule on the c_idx-ordered sims
   * array. Ragged `v` (length ≠ dim) yields NULL like the vec_clean'd
-  * family convention; input must be containsNull=false (vec_clean).
+  * family convention; input must be containsNull=false (vec_clean). A
+  * NaN similarity throws, naming the cell ([[CoarseArgmax.nanSimilarity]]).
   */
 case class CoarseArgmax(vec: Expression, nrm: Expression,
     centroids: Seq[Double], sqrtNorms: Seq[Double])
@@ -440,6 +441,7 @@ case class CoarseArgmax(vec: Expression, nrm: Expression,
       var i = 0
       while (i < dim) { dp += xs.getDouble(i) * cc(c * dim + i); i += 1 }
       val sim = dp / (sqrtNrm * sn(c))
+      if (java.lang.Double.isNaN(sim)) throw CoarseArgmax.nanSimilarity(prettyName, c)
       if (sim > bestSim) { bestSim = sim; best = c }
       c += 1
     }
@@ -470,6 +472,9 @@ case class CoarseArgmax(vec: Expression, nrm: Expression,
          |      $dp += $a.getDouble($i) * $ccRef[$c * $dim + $i];
          |    }
          |    double $sim = $dp / ($sqrtNrm * $snRef[$c]);
+         |    if (Double.isNaN($sim)) {
+         |      throw graft.functions.CoarseArgmax.nanSimilarity("$prettyName", $c);
+         |    }
          |    if ($sim > $bestSim) { $bestSim = $sim; $best = $c; }
          |  }
          |  ${ev.value} = $best;
@@ -484,6 +489,21 @@ case class CoarseArgmax(vec: Expression, nrm: Expression,
   override def prettyName: String = "coarse_argmax"
 }
 
+object CoarseArgmax {
+  /** A NaN similarity has no place in the cell order: strict `>` would
+    * skip it and assign the row to another cell silently, where the
+    * replaced `array_max` tree ranked NaN above every value. It arises
+    * only from a zero-norm cell or vector, or a non-finite component,
+    * which the callers drop beforehand, so fail loudly naming the cell.
+    * Shared by eval and generated code (codegen calls it by name).
+    */
+  def nanSimilarity(name: String, cell: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"$name: the similarity to coarse cell $cell is NaN — a zero-norm " +
+        "or non-finite cell or input vector reached the assignment; drop " +
+        "zero-norm cells and zero or non-finite vectors first")
+}
+
 /** `coarse_resid_sq(v, nrm)` — squared norm of the residual against the
   * cosine-nearest coarse centroid (the [[CoarseArgmax]] assignment),
   * clamped at 0: `max(nrm − 2·<v, C[best]> + ‖C[best]‖², 0)`. One loop,
@@ -492,7 +512,8 @@ case class CoarseArgmax(vec: Expression, nrm: Expression,
   * centroid vec_dots) was re-inlined and re-evaluated per element_at
   * reference (same measured pathology as [[CoarseArgmax]]'s docstring).
   * Arithmetic, fold order, first-max tiebreak, and the 0-clamp replicate
-  * the replaced expressions exactly.
+  * the replaced expressions exactly; a NaN similarity throws, as in
+  * [[CoarseArgmax]].
   */
 case class CoarseResidSq(vec: Expression, nrm: Expression,
     centroids: Seq[Double], norms: Seq[Double])
@@ -544,6 +565,7 @@ case class CoarseResidSq(vec: Expression, nrm: Expression,
       var i = 0
       while (i < dim) { dp += xs.getDouble(i) * cc(c * dim + i); i += 1 }
       val sim = dp / (sqrtNrm * sn(c))
+      if (java.lang.Double.isNaN(sim)) throw CoarseArgmax.nanSimilarity(prettyName, c)
       if (sim > bestSim) { bestSim = sim; best = c; bestDp = dp }
       c += 1
     }
@@ -579,6 +601,9 @@ case class CoarseResidSq(vec: Expression, nrm: Expression,
          |      $dp += $a.getDouble($i) * $ccRef[$c * $dim + $i];
          |    }
          |    double $sim = $dp / ($sqrtNrm * $snRef[$c]);
+         |    if (Double.isNaN($sim)) {
+         |      throw graft.functions.CoarseArgmax.nanSimilarity("$prettyName", $c);
+         |    }
          |    if ($sim > $bestSim) { $bestSim = $sim; $best = $c; $bestDp = $dp; }
          |  }
          |  double $r = $b - 2.0 * $bestDp + $cnRef[$best];

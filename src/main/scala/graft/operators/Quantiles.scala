@@ -55,6 +55,11 @@ object Quantiles {
     * A null `pct` means the sketch's rank guarantee was violated —
     * impossible for Spark's GK implementation at the declared accuracy,
     * and loudly caught by the oracle/spec rather than silently absorbed.
+    *
+    * @throws IllegalArgumentException when `ps` is empty, holds a point
+    *   outside [0, 1], or repeats a point. A repeated point used to return
+    *   double-counted, wrong quantiles; it now throws, so pass each point
+    *   once and reuse its row.
     */
   def exactPercentilesOn(df: DataFrame, groupCol: String, valueCol: String,
       ps: Seq[Double], accuracy: Int = 10000,

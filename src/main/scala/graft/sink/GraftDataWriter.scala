@@ -34,6 +34,13 @@ final case class GraftCommitMessage(files: Seq[String], rows: Long,
   *    txn.per.batch` rows, bounding file size the way the reference bounds
   *    a TransactionBatch (`HiveWriter.scala:86-91`); a keep-alive flush
   *    does not count toward it.
+  *  - Dictionaries (parquet and ORC): the first data file a task opens is
+  *    its probe. It builds every column's dictionary, and at close records
+  *    for the table which columns it wrote without one. Every later file
+  *    writes those columns plain from the start, skipping a dictionary
+  *    that would be built only to be discarded; the other columns keep
+  *    their dictionaries, and a column the next probe keeps a dictionary
+  *    for gets it back. See [[GraftDataWriter.plainColumns]].
   *
   * Durability model (deliberate upgrade): files become visible only through
   * the driver's epoch manifest ([[CommitLog]]), so a task that dies
@@ -167,10 +174,25 @@ final class GraftDataWriter(
     def hflush(): Unit = ()
   }
 
-  private def openFile(path: Path): DataFile =
-    if (opts.isParquet) new ParquetFile(path)
-    else if (opts.isOrc) new OrcFile(path)
+  private val dictionaryKey = (opts.tableDir, opts.format)
+  private var probeOpened = false
+
+  /** Opens the task's first file as its probe, with every dictionary on;
+    * later files skip the dictionaries the table's last probe discarded.
+    */
+  private def openFile(path: Path): DataFile = {
+    val probe = !probeOpened
+    probeOpened = true
+    val plain =
+      if (probe) Set.empty[String]
+      else GraftDataWriter.plainColumns.getOrDefault(dictionaryKey, Set.empty)
+    if (opts.isParquet) new ParquetFile(path, plain, probe)
+    else if (opts.isOrc) new OrcFile(path, plain, probe)
     else new JsonlFile(path)
+  }
+
+  private def recordPlain(columns: Set[String]): Unit =
+    GraftDataWriter.plainColumns.put(dictionaryKey, columns)
 
   // Columnar files' per-writer state, built once per writer rather than
   // once per file. One projection serves every file: each write consumes
@@ -187,15 +209,18 @@ final class GraftDataWriter(
     * write support; the column stats come from the footer the writer just
     * built in memory at close — zero extra IO.
     */
-  private final class ParquetFile(path: Path) extends DataFile {
+  private final class ParquetFile(path: Path, plain: Set[String], probe: Boolean)
+      extends DataFile {
     // like the ORC landing: bloom.columns also records native
     // per-row-group blooms (partition columns are path-only, filtered)
     private val writer = ParquetIO.createWriter(path, dataFs, parquetConf,
-      bloomColumns = opts.bloomColumns.filter(dataSchema.fieldNames.contains))
+      bloomColumns = opts.bloomColumns.filter(dataSchema.fieldNames.contains),
+      plainColumns = plain)
     private val project = dataProjection
     override def write(row: InternalRow): Unit = writer.write(project(row))
     override def close(): String = {
       writer.close()
+      if (probe) recordPlain(ParquetIO.plainColumns(writer.getFooter))
       FileStats.fromFooter(writer.getFooter).serialize
     }
     override def abort(): Unit = try writer.close() catch { case _: Throwable => }
@@ -205,12 +230,17 @@ final class GraftDataWriter(
     * orc`, `HiveStreamingExample.scala:26-31`); stats come from the
     * writer's in-memory file statistics at close.
     */
-  private final class OrcFile(path: Path) extends DataFile {
+  private final class OrcFile(path: Path, plain: Set[String], probe: Boolean)
+      extends DataFile {
     private val writer = new OrcIO.RowWriter(path, dataFs, dataSchema, conf,
-      bloomColumns = opts.bloomColumns)
+      bloomColumns = opts.bloomColumns, directColumns = plain)
     private val project = dataProjection
     override def write(row: InternalRow): Unit = writer.write(project(row))
-    override def close(): String = writer.closeWithStats()
+    override def close(): String = {
+      val stats = writer.closeWithStats()
+      if (probe) recordPlain(writer.plainColumns)
+      stats
+    }
     override def abort(): Unit = writer.abort()
   }
 
@@ -342,4 +372,19 @@ final class GraftDataWriter(
     heartbeat.foreach(_.shutdown())
     segments.values.foreach(_.close())
   }
+}
+
+object GraftDataWriter {
+
+  /** What each table's latest probe file learned, per (table directory,
+    * format): the columns it wrote without a dictionary, as parquet
+    * dot-paths or ORC string column names. It lives per JVM, so every
+    * writer task of the table in this executor reads it; a file that finds
+    * no entry builds every dictionary, as a probe does. Learning pays
+    * because a small file decides whether to keep a dictionary only after
+    * building it whole: parquet at its first page, ORC at close when the
+    * file holds less than one 10k-row stride.
+    */
+  private[sink] val plainColumns =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Set[String]]()
 }

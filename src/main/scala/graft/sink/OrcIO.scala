@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.hive.ql.exec.vector._
-import org.apache.orc.{OrcFile, TypeDescription}
+import org.apache.orc.{OrcFile, OrcProto, TypeDescription}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -109,6 +109,14 @@ object OrcIO {
   /** Streaming row writer over one ORC segment file. Same lifecycle as the
     * parquet segment writer.
     *
+    * Dictionaries: ORC builds one per string column and keeps it only when
+    * the distinct keys stay under `orc.dictionary.key.threshold` of the
+    * rows; a file below one 10k-row stride decides that only at close,
+    * after the whole dictionary is built. `directColumns` names string
+    * columns to write DIRECT from the start ([[GraftDataWriter]] passes
+    * the ones the table's last probe file wrote DIRECT), and after close
+    * [[plainColumns]] reports which string columns this file wrote DIRECT.
+    *
     * DECISION (r13 verdict #7, REVISED r15) — bloom filters on ORC
     * landings keep the format-uniform SIDECAR ([[Bloom]]) for DRIVER-side
     * plan-time file skipping ([[GraftScan.planFiles]] stage 3: a file is
@@ -144,10 +152,11 @@ object OrcIO {
     * JSONL landings store exact micros and are unaffected.
     */
   final class RowWriter(path: Path, fs: org.apache.hadoop.fs.FileSystem,
-      schema: StructType, conf: Configuration, bloomColumns: Seq[String] = Seq.empty) {
+      schema: StructType, conf: Configuration, bloomColumns: Seq[String] = Seq.empty,
+      directColumns: Set[String] = Set.empty) {
     private val td = typeDescription(schema)
     private val fillers: Array[Filler] = schema.fields.map(f => fillerFor(f.dataType))
-    private val writer = {
+    private val options = {
       var opts = OrcFile.writerOptions(conf)
         .setSchema(td)
         .fileSystem(fs)
@@ -160,8 +169,13 @@ object OrcIO {
       val bloomable = bloomColumns.filter(schema.fieldNames.contains)
       if (bloomable.nonEmpty)
         opts = opts.bloomFilterColumns(bloomable.mkString(","))
-      OrcFile.createWriter(path, opts)
+      val direct = schema.fieldNames.filter(n => directColumns(n) && listable(n))
+      if (direct.nonEmpty)
+        opts = opts.directEncodingColumns(direct.mkString(","))
+      opts
     }
+    private val encodings = new EncodingRecorder(fs, path, options)
+    private val writer = OrcFile.createWriter(path, options.physicalWriter(encodings))
     private val batch = td.createRowBatch(1024)
     private var rows = 0L
 
@@ -197,6 +211,71 @@ object OrcIO {
     def abort(): Unit = {
       try writer.close() catch { case _: Throwable => }
     }
+
+    /** After close: the string columns that every stripe wrote DIRECT. */
+    def plainColumns: Set[String] =
+      if (encodings.stripes.isEmpty) Set.empty
+      else td.getFieldNames.asScala.zip(td.getChildren.asScala).collect {
+        case (name, t) if t.getCategory == TypeDescription.Category.STRING &&
+            encodings.stripes.forall { kinds =>
+              kinds(t.getId) == OrcProto.ColumnEncoding.Kind.DIRECT ||
+                kinds(t.getId) == OrcProto.ColumnEncoding.Kind.DIRECT_V2
+            } => name
+      }.toSet
+
+    /** `directEncodingColumns` splits its list on `,`, walks `.` as a
+      * nested path, trims names and matches them case-insensitively: list
+      * only a name it resolves to this very column; the others keep their
+      * dictionaries.
+      */
+    private def listable(name: String): Boolean =
+      !name.exists(c => c == ',' || c == '.') && name == name.trim &&
+        schema.fieldNames.count(_.equalsIgnoreCase(name)) == 1
+  }
+
+  /** The file's `PhysicalWriter`, passing every call through to ORC's own
+    * and recording each stripe's column encodings as the stripe footer
+    * goes out: no IO of its own. ORC's writer is created on the first
+    * call, after `WriterImpl` has fixed the buffer size in `opts`, so the
+    * file's bytes are those ORC would write without this wrapper.
+    */
+  private final class EncodingRecorder(fs: org.apache.hadoop.fs.FileSystem,
+      path: Path, opts: OrcFile.WriterOptions) extends org.apache.orc.PhysicalWriter {
+    private lazy val out = new org.apache.orc.impl.PhysicalFsWriter(fs, path, opts)
+    /** Per written stripe, each column's encoding kind by column id. */
+    val stripes =
+      scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[OrcProto.ColumnEncoding.Kind]]
+
+    override def finalizeStripe(footer: OrcProto.StripeFooter.Builder,
+        dirEntry: OrcProto.StripeInformation.Builder): Unit = {
+      stripes += footer.getColumnsList.asScala.map(_.getKind).toIndexedSeq
+      out.finalizeStripe(footer, dirEntry)
+    }
+    override def writeHeader(): Unit = out.writeHeader()
+    override def createDataStream(name: org.apache.orc.impl.StreamName)
+        : org.apache.orc.PhysicalWriter.OutputReceiver = out.createDataStream(name)
+    override def writeIndex(name: org.apache.orc.impl.StreamName,
+        index: OrcProto.RowIndex.Builder): Unit = out.writeIndex(name, index)
+    override def writeBloomFilter(name: org.apache.orc.impl.StreamName,
+        bloom: OrcProto.BloomFilterIndex.Builder): Unit = out.writeBloomFilter(name, bloom)
+    override def writeStatistics(name: org.apache.orc.impl.StreamName,
+        stats: OrcProto.ColumnStatistics.Builder): Unit = out.writeStatistics(name, stats)
+    override def writeFileMetadata(meta: OrcProto.Metadata.Builder): Unit =
+      out.writeFileMetadata(meta)
+    override def writeFileFooter(footer: OrcProto.Footer.Builder): Unit =
+      out.writeFileFooter(footer)
+    override def writePostScript(ps: OrcProto.PostScript.Builder): Long =
+      out.writePostScript(ps)
+    override def close(): Unit = out.close()
+    override def flush(): Unit = out.flush()
+    override def appendRawStripe(stripe: java.nio.ByteBuffer,
+        dirEntry: OrcProto.StripeInformation.Builder): Unit =
+      out.appendRawStripe(stripe, dirEntry)
+    override def getFileBytes(column: Int,
+        variant: org.apache.orc.impl.writer.WriterEncryptionVariant): Long =
+      out.getFileBytes(column, variant)
+    override def getStreamOptions(): org.apache.orc.impl.writer.StreamOptions =
+      out.getStreamOptions
   }
 
   /** Rows per decoded batch, and the capacity of the constant vectors the

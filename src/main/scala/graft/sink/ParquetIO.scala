@@ -23,7 +23,9 @@ import org.apache.spark.sql.types.StructType
   *
   *  - write: parquet-hadoop `ParquetWriter` over Spark's
   *    `ParquetWriteSupport` (the exact `InternalRow` consumer Spark's own
-  *    parquet datasource uses), snappy-compressed, dictionary-encoded;
+  *    parquet datasource uses), snappy-compressed; a column is
+  *    dictionary-encoded unless the table's last probe file dropped its
+  *    dictionary ([[plainColumns]], chosen per file by [[GraftDataWriter]]);
   *  - read: `ParquetReader` over Spark's `ParquetReadSupport` with the
   *    requested schema pushed into the parquet scan — column pruning reaches
   *    the page level, so a 2-column projection of a 20-column table reads 2
@@ -103,18 +105,38 @@ object ParquetIO {
     * when min/max ranges cover it. One `bloom.columns` option, three
     * skipping tiers on both columnar formats (manifest sidecar at plan
     * time, native bloom inside opened files).
+    *
+    * `plainColumns` (dot-paths, as [[plainColumns]] returns them) are
+    * written without a dictionary. [[GraftDataWriter]] passes the columns
+    * whose dictionary the table's last probe file discarded: where that
+    * still holds, parquet would build the dictionary only to fall back to
+    * the same plain pages.
     */
   def createWriter(
       path: Path, fs: org.apache.hadoop.fs.FileSystem, pinned: Configuration,
-      bloomColumns: Seq[String] = Seq.empty): ParquetWriter[InternalRow] = {
+      bloomColumns: Seq[String] = Seq.empty,
+      plainColumns: Set[String] = Set.empty): ParquetWriter[InternalRow] = {
     var b = new RowWriterBuilder(new FsOutputFile(fs, path))
       .withConf(pinned)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withWriteMode(ParquetFileWriter.Mode.CREATE)
       .withRowGroupSize(16L * 1024 * 1024)
     bloomColumns.foreach(c => b = b.withBloomFilterEnabled(c, true))
+    plainColumns.foreach(c => b = b.withDictionaryEncoding(c, false))
     b.build()
   }
+
+  /** The leaf columns of a written file that no row group stores with a
+    * dictionary page, as the dot-paths `withDictionaryEncoding` takes. A
+    * path with a `.` inside one of its names is left out: its dot-path
+    * would name a different column.
+    */
+  def plainColumns(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Set[String] =
+    footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      .groupBy(_.getPath)
+      .collect { case (p, chunks) if !chunks.exists(_.hasDictionaryPage) &&
+          !p.toArray.exists(_.contains(".")) => p.toDotString }
+      .toSet
 
   /** Reader returning `InternalRow`s in `requestedSchema` field order.
     * The requested schema is pushed into the parquet scan (only its column

@@ -195,6 +195,30 @@ class OperatorPropertiesSpec extends SparkSpec {
       "tie cells 0/1: index 1 must never win over identical index 0")
   }
 
+  test("CoarseArgmax/CoarseResidSq throw on a NaN similarity, naming the cell, " +
+      "interpreted and generated") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    // cell 1 is the zero vector: its similarity is 0 / 0, which a strict
+    // `>` would skip, assigning the row to cell 0 without a word
+    val cents = Seq(1.0, 0.0, 0.0, 0.0)
+    val v = BoundReference(0, ArrayType(DoubleType, containsNull = false), nullable = false)
+    val nrm = BoundReference(1, DoubleType, nullable = false)
+    val row = new GenericInternalRow(Array[Any](new GenericArrayData(Array(0.6, 0.8)), 1.0))
+    Seq(graft.functions.CoarseArgmax(v, nrm, cents, Seq(1.0, 0.0)),
+      graft.functions.CoarseResidSq(v, nrm, cents, Seq(1.0, 0.0))).foreach { e =>
+      val interpreted = intercept[IllegalArgumentException](e.eval(row))
+      val generated = intercept[IllegalArgumentException](
+        GenerateUnsafeProjection.generate(Seq(e)).apply(row))
+      Seq(interpreted, generated).foreach { t =>
+        assert(t.getMessage.contains(s"${e.prettyName}: the similarity to coarse cell 1 is NaN"),
+          t.getMessage)
+      }
+    }
+  }
+
   test("minhash LSH pairs are contained in the exact-Jaccard pair set") {
     val got = Dedup.minhashLsh(spark, sf0001, threshold = 0.4)
       .select("a_id", "b_id", "jaccard").collect()

@@ -15,6 +15,7 @@ import org.apache.spark.sql.types._
   * system data files are created through ([[DataFs]]).
   */
 class WriterContractSpec extends graft.SparkSpec {
+  import WriterContractSpec.dictRow
 
   private def opts(format: String, dir: String) = GraftSinkOptions(
     path = dir, db = "t", table = "x", partitionColumns = Seq.empty,
@@ -229,6 +230,156 @@ class WriterContractSpec extends graft.SparkSpec {
       }
     } finally keys.foreach(hconf.unset)
   }
+
+  /** Whether each column of a landed file has a dictionary: a parquet
+    * dictionary page, or an ORC DICTIONARY encoding in every stripe.
+    */
+  private def dictionaryEncoded(file: String): Map[String, Boolean] = {
+    val path = new Path(file)
+    if (file.endsWith(".parquet")) {
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(hconf, path,
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      footer.getBlocks.asScala.flatMap(_.getColumns.asScala).groupBy(_.getPath.toDotString)
+        .map { case (c, chunks) => c -> chunks.forall(_.hasDictionaryPage) }
+    } else {
+      val reader = org.apache.orc.OrcFile.createReader(path,
+        org.apache.orc.OrcFile.readerOptions(hconf))
+      val rows = reader.rows().asInstanceOf[org.apache.orc.impl.RecordReaderImpl]
+      try {
+        val footers = reader.getStripes.asScala.map(rows.readStripeFooter)
+        val td = reader.getSchema
+        td.getFieldNames.asScala.zip(td.getChildren.asScala).map { case (c, t) =>
+          c -> footers.forall(_.getColumns(t.getId).getKind ==
+            org.apache.orc.OrcProto.ColumnEncoding.Kind.DICTIONARY_V2)
+        }.toMap
+      } finally { rows.close(); reader.close() }
+    }
+  }
+
+  private val dictSchema = StructType(Seq(StructField("id", LongType),
+    StructField("msg", StringType), StructField("cat", StringType)))
+
+  /** A file's (id, msg, cat) rows through the row reader and through the
+    * columnar reader of its format.
+    */
+  private def readBoth(file: String): (Seq[(Long, String, String)], Seq[(Long, String, String)]) = {
+    def values(r: org.apache.spark.sql.catalyst.InternalRow) =
+      (r.getLong(0), r.getUTF8String(1).toString, r.getUTF8String(2).toString)
+    val part = GraftInputPartition(file, Map.empty)
+    val row = new GraftPartitionReader(part, dictSchema, hconf)
+    val rows = try Iterator.continually(row.next()).takeWhile(identity)
+      .map(_ => values(row.get())).toList finally row.close()
+    val col =
+      if (file.endsWith(".parquet")) new GraftColumnarReader(part, dictSchema, hconf)
+      else new GraftOrcColumnarReader(part, dictSchema, hconf)
+    val batches = try Iterator.continually(col.next()).takeWhile(identity)
+      .flatMap(_ => col.get().rowIterator().asScala.map(values)).toList
+      finally col.close()
+    (rows, batches)
+  }
+
+  for (format <- Seq("parquet", "orc")) {
+    test(s"$format: later files skip the dictionaries the table's last probe file discarded") {
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val dir = tempDir(s"graft-dict-$format")
+      val options = sinkOpts(dir, "format" -> format)
+      val tableDir = GraftSinkOptions.from(
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava)).tableDir
+      def recorded = Option(GraftDataWriter.plainColumns.get((tableDir, format)))
+      val learned = if (format == "parquet") Set("id", "msg") else Set("msg")
+      // epochs 1-2 carry a unique msg, epochs 3-4 only 3 msg values; every
+      // epoch is one task whose first row is "US" (its probe file)
+      val epochs = (1 to 4).map(e => ((e - 1) * 600 + 1 to e * 600, e <= 2))
+      val in = MemoryStream[Int]
+      val q = in.toDS().map(i => dictRow(i, uniqueMsg = (i - 1) / 600 < 2))
+        .toDF("id", "msg", "cat", "region")
+        .writeStream.format("graft-streaming").options(options)
+        .option("checkpointLocation", s"$dir/_cp").start()
+      val filesByEpoch = try epochs.zipWithIndex.map { case ((ids, _), e) =>
+        in.addData(ids: _*)
+        q.processAllAvailable()
+        // (a) the probe of a unique-msg epoch records msg (and, for parquet,
+        // the unique id) as plain; the 4-value cat keeps its dictionary
+        if (e == 0) assert(recorded === Some(learned))
+        assert(!recorded.exists(_.contains("cat")), s"epoch ${e + 1}: $recorded")
+        val files = new CommitLog(tableDir, hconf).committedFiles()
+          .filter(f => new Path(f).getName.startsWith(s"part-e$e-"))
+        assert(files.size === 2, s"epoch ${e + 1}: $files")
+        files.map(f => (if (f.contains("region=US")) "US" else "EU") -> f).toMap
+      } finally q.stop()
+      val encoded = filesByEpoch.map(_.map { case (r, f) => r -> dictionaryEncoded(f) })
+      encoded.zipWithIndex.foreach { case (byRegion, e) =>
+        // (b) cat is dictionary-encoded in every file of every epoch
+        byRegion.foreach { case (r, cols) =>
+          assert(cols("cat"), s"epoch ${e + 1} $r: $cols")
+        }
+      }
+      // (c) drift: epoch 3's later file still follows epoch 2's outcome
+      // and writes its 3-value msg plain; the probe of epoch 3 keeps the
+      // msg dictionary, so by epoch 4 the later file has it again
+      assert(!encoded(1)("EU")("msg"))
+      assert(encoded(2)("US")("msg") && !encoded(2)("EU")("msg"))
+      assert(encoded(3)("EU")("msg") && encoded(3)("US")("msg"))
+      assert(recorded.exists(r => !r.contains("msg")), s"$recorded")
+      // (d) both readers return what was sent, and compaction keeps it
+      val sent = epochs.flatMap { case (ids, unique) =>
+        ids.map(i => dictRow(i, unique)).map(r => (r._1, r._2, r._3)) }
+      filesByEpoch.flatMap(_.values).map(readBoth).unzip match {
+        case (rows, batches) =>
+          assert(rows.flatten.sortBy(_._1) === sent)
+          assert(batches.flatten.sortBy(_._1) === sent)
+      }
+      def countAndSum() = {
+        val df = spark.read.format("graft-streaming").options(options).load()
+        val r = df.agg(org.apache.spark.sql.functions.count("*"),
+          org.apache.spark.sql.functions.sum("id")).head
+        (r.getLong(0), r.getLong(1))
+      }
+      val expected = (sent.size.toLong, sent.map(_._1).sum)
+      assert(countAndSum() === expected)
+      assert(Compact.run(tableDir, hconf, retainMillis = 0L).consolidatedFiles === 2)
+      assert(countAndSum() === expected)
+
+      // (e) a file that skips the learned dictionaries has the bytes of
+      // one that built and discarded them
+      val batch = (1 to 800).map(i => dictRow(i, uniqueMsg = true))
+      def land(dir: String, rows: Seq[(Long, String, String, String)]): Unit =
+        rows.toDF("id", "msg", "cat", "region").coalesce(1)
+          .write.format("graft-streaming").mode("append")
+          .options(sinkOpts(dir, "format" -> format)).save()
+      def euFiles(dir: String) = new CommitLog(s"$dir/testdb.t", hconf).committedFiles()
+        .filter(_.contains("region=EU"))
+      val fresh = tempDir(s"graft-dict-fresh-$format")
+      land(fresh, batch)
+      val warm = tempDir(s"graft-dict-warm-$format")
+      land(warm, (1001 to 1800).map(i => dictRow(i, uniqueMsg = true)))
+      val warmed = euFiles(warm).toSet
+      land(warm, batch)
+      // "US" opens first in both tables, so "EU" is the later file: in the
+      // fresh table it builds every dictionary, in the warm one it skips
+      // the dictionaries the warm-up's probe discarded
+      val Seq(a) = euFiles(fresh)
+      val Seq(b) = euFiles(warm).filterNot(warmed)
+      assert(dictionaryEncoded(a).filter(_._2).keySet === Set("cat"))
+      assert(dictionaryEncoded(b).filter(_._2).keySet === Set("cat"))
+      def bytes(f: String) = Files.readAllBytes(Paths.get(new Path(f).toUri.getPath))
+      assert(bytes(a).length === bytes(b).length)
+      assert(java.util.Arrays.equals(bytes(a), bytes(b)))
+      assert(readBoth(a) === readBoth(b))
+    }
+  }
+}
+
+object WriterContractSpec {
+  /** One row of the dictionary-learning tests: unique `id` and (when
+    * `uniqueMsg`) unique `msg`, a 4-value `cat`, and 2 regions. Odd ids
+    * are "US", so a run that starts at an odd id makes the "US" file its
+    * task's probe and the "EU" file a later one.
+    */
+  def dictRow(i: Int, uniqueMsg: Boolean): (Long, String, String, String) =
+    (i.toLong, if (uniqueMsg) s"msg-$i-${i * 7919}" else s"x${i % 3}",
+      s"c${i % 4}", if (i % 2 == 0) "EU" else "US")
 }
 
 /** The local file system under its own scheme, recording the path of
