@@ -1,12 +1,14 @@
 package graft
 
-/** Diagnostic main: execute the shuffle-heavy dedup/similarity queries under
-  * the BENCH config (local[32], shuffle.partitions=32, AQE on — Spark 4
-  * default) at sf0.1 and print each query's FINAL adaptive plan, so the
-  * AQE behavior recorded in SCALE.md (§"AQE under the bench config") is
-  * observed, not asserted. Collect() (results are tens of rows) forces
-  * execution so AdaptiveSparkPlan reaches isFinalPlan=true and the
-  * AQEShuffleRead nodes show their runtime-coalesced partition counts.
+/** Diagnostic main: `graft.AqeAudit [q_name...]` executes each named query
+  * (default: the shuffle-heavy dedup/similarity set below) under the BENCH
+  * config ([[MainSession]] at `SPARK_GRAFT_CPUS`, default 32; AQE on, the
+  * Spark 4 default) over `SPARK_GRAFT_SF_DIR` (default sf0.1), and prints
+  * its shuffle bytes and its full formatted FINAL adaptive plan, so the
+  * AQE behavior and the plan shapes recorded in SCALE.md are observed,
+  * not asserted. Collect() (results are tens of rows) forces execution so
+  * AdaptiveSparkPlan reaches isFinalPlan=true and the AQEShuffleRead
+  * nodes show their runtime-coalesced partition counts.
   */
 object AqeAudit {
 
@@ -32,20 +34,15 @@ object AqeAudit {
   private def mb(bytes: Long): String = f"${bytes / 1048576.0}%.1f MiB"
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = MainSession.start(MainSession.cpus(32))
     val bytes = new ShuffleBytes
     spark.sparkContext.addSparkListener(bytes)
     println(s"adaptive.enabled=${spark.conf.get("spark.sql.adaptive.enabled")} " +
       s"coalescePartitions=${spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")} " +
       s"skewJoin=${spark.conf.get("spark.sql.adaptive.skewJoin.enabled")} " +
       s"advisoryPartitionSize=${spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")}")
-    val interesting =
+    val interesting = if (args.nonEmpty) args.toSeq else
       Seq("q_dedup_ngram", "q_dedup_near", "q_dedup_simhash", "q_dedup_embed",
         "q_dedup_cluster", "q_sim_knn_join", "q_join_inner",
         "q_quality_repetition", "q_source_mix", "q_join_asof",
@@ -65,18 +62,12 @@ object AqeAudit {
     interesting.foreach { name =>
       bytes.reset()
       val df = SparkEntry.queries(name)(spark, dir)
-      val n = df.collect().length
+      val n = df.collect().length // executes THIS QueryExecution → final plan
       Thread.sleep(500) // let the async listener bus drain task-end events
       println(s"\n########## $name (rows=$n) shuffleWrite=${mb(bytes.write.get)} " +
         s"shuffleRead=${mb(bytes.read.get)}")
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      // the full formatted plan is long; surface the AQE-relevant lines
-      plan.linesIterator.filter(l =>
-        l.contains("AdaptiveSparkPlan") || l.contains("AQEShuffleRead") ||
-        l.contains("Exchange") || l.contains("Arguments: coalesced") ||
-        l.contains("SortMergeJoin") || l.contains("BroadcastHashJoin"))
-        .foreach(println)
+      println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       spark.catalog.clearCache()
     }
     spark.stop()

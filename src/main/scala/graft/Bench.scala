@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -148,29 +147,28 @@ object Bench {
       elapsed > 2.0 * runningMedian && spillMb == 0L &&
       procGcMs < (elapsed * 1000 * 0.15).toLong
 
+  /** `SPARK_GRAFT_CONF="k=v,k2=v2"` as session conf pairs, extracted pure
+    * for its spec. Pairs are comma-separated; a value keeps any `=` it
+    * holds; keys and values are trimmed, and a pair whose key is blank
+    * or that has no `=` is skipped rather than handed to the builder.
+    * Bench-only: Verify must not inherit a leftover A/B override.
+    */
+  private[graft] def confOverrides(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map(_.trim).filter(_.nonEmpty).flatMap { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+        case _ => None
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = MainSession.cpus(32)
     // experiment knob for local A/Bs (e.g. SPARK_GRAFT_CONF=
     // "spark.sql.adaptive.enabled=false"); the driver leaves it unset, so
-    // the measured configuration is the declared one above
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          // trim BEFORE the guard: a whitespace-only key (" =v") must be
-          // skipped, not passed to builder.config("") to crash the bench
-          case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-          case _ =>
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the measured configuration is the declared policy
+    val spark = MainSession.start(cpus,
+      sys.env.get("SPARK_GRAFT_CONF").map(confOverrides).getOrElse(Nil))
     val codegenFailures = installCodegenCounter()
     val telemetry = new TaskTelemetry
     spark.sparkContext.addSparkListener(telemetry)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Plan-time scaling benchmark (r13 verdict #4): measures the DRIVER-side
@@ -34,14 +33,7 @@ object PlanScaleBench {
   def main(args: Array[String]): Unit = {
     val epochsA = sys.env.getOrElse("SPARK_GRAFT_PLAN_EPOCHS_A", "12").toInt
     val epochsB = sys.env.getOrElse("SPARK_GRAFT_PLAN_EPOCHS_B", "240").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession.start(MainSession.cpus(32))
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val conf = spark.sparkContext.hadoopConfiguration

@@ -9,22 +9,18 @@ import org.apache.spark.sql.functions._
   *       table (scans list_id + norm + m int codes; float vectors are
   *       touched only by the top-`rerank` broadcast point-fetch),
   * with the on-disk byte footprint of both tables and the top-10 recall
-  * of (b) against (a). The corpora are the deterministic independent
-  * pseudo-random vectors ProfileEmbed's scale sweep uses (sin-hash per
-  * (id, dim) — NOT jittered fixture copies, which would grow genuine
-  * near-dup structure quadratically and measure the workload instead of
-  * the pipeline).
+  * of (b) against (a). The corpora are deterministic independent
+  * pseudo-random vectors (sin-hash per (id, dim) — NOT jittered fixture
+  * copies, which would grow genuine near-dup structure quadratically and
+  * measure the workload instead of the pipeline).
   *
   * Prints ONE JSON line → committed as `PQBENCH_r{N}.json`. Env:
-  * SPARK_GRAFT_PQ_SCALES (default "2000,6000,20000,64000").
+  * SPARK_GRAFT_PQ_SCALES (default "2000,6000,20000,64000"),
+  * SPARK_GRAFT_CPUS (32).
   */
 object PqBench {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = MainSession.start(MainSession.cpus(32))
     import graft.operators.Similarity
 
     val scales = sys.env.getOrElse("SPARK_GRAFT_PQ_SCALES",
@@ -43,7 +39,7 @@ object PqBench {
     }
 
     val rows = scales.map { n =>
-      // deterministic independent corpus (ProfileEmbed's generator)
+      // deterministic independent corpus
       val corpus = spark.range(n).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(63)), j => {
           val h = sin(col("id") * 12.9898 + j * 78.233) * 43758.5453

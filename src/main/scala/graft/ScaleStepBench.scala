@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-step evidence for the r21/r22-touched operators (r21 verdict #5):
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * wall. This main synthesizes DETERMINISTIC inputs at 10× the sf0.1 row
   * counts (docs 50k vs 5k, vectors 20k vs 2k, quantile rows 6M vs 600k —
   * in-Spark expression generators, seeded, same shapes as the fixture and
-  * the DedupBench/ProfileEmbed generators) and times the touched operator
+  * PqBench's vector generator) and times the touched operator
   * CORES against untouched controls, at whatever core count
   * $SPARK_GRAFT_CPUS sets — run it at 32 and 8 and commit both lines.
   *
@@ -23,23 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStepBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = MainSession.cpus(32)
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALESTEP_MULT", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession.start(cpus)
 
     val nDocs = 5000L * mult
     val nVecs = 2000L * mult
     val nRows = 600000L * mult
 
-    // ~25-token docs with the DedupBench near-dup structure (every i≡4
-    // mod 10 is a one-token mutation of i-4) so dedup paths do real work;
-    // token modulus large enough that accidental exact dups don't occur
+    // ~25-token docs with a fixed near-dup structure (every i≡4 mod 10 is
+    // a one-token mutation of i-4) so dedup paths do real work; token
+    // modulus large enough that accidental exact dups don't occur. (The
+    // streaming dedup path is measured by perfbench's dedup_stream, whose
+    // bandindex.* metrics report the index's files, bytes and probe cost.)
     val seedCol = when(pmod(col("id"), lit(10)) === 4, col("id") - 4)
       .otherwise(col("id"))
     val docs = spark.range(nDocs)
@@ -56,7 +52,7 @@ object ScaleStepBench {
           (pmod(col("doc_id"), lit(3)) + 1).cast("int")))
       .withColumn("n_chars", length(col("text")))
 
-    // ProfileEmbed's deterministic vector generator (fract(sin)) at 10×
+    // PqBench's deterministic vector generator (fract(sin)) at 10×
     val vecs = spark.range(nVecs).select(col("id").as("vec_id"),
       transform(sequence(lit(0), lit(63)), j => {
         val h = sin(col("id") * 12.9898 + j * 78.233) * 43758.5453

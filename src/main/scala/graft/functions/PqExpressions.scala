@@ -372,8 +372,8 @@ object PqAdc {
   * centroid, as ONE codegen loop over a flat referenced `cells × dim`
   * centroid array (plus the cells' precomputed sqrt-norms).
   *
-  * Replaces the literal-array argmax `array_position(sims,
-  * array_max(sims))` where `sims` was `cells` × `vec_dot(v, <64-literal
+  * Replaces the literal-array argmax (`array_position` of `array_max`
+  * over `sims`) where `sims` was `cells` × `vec_dot(v, <64-literal
   * CreateArray>)` expression trees. That shape was measured as the
   * board's single hottest per-row cost (r22): Catalyst inlines the
   * argmax tree into EVERY consumer (list_id, the residual encoder's cell

@@ -31,6 +31,16 @@ object Similarity {
 
   private def litVec(p: Seq[Double]): Column = array(p.map(lit): _*)
 
+  /** 0-based index of the cosine-nearest of the flat `cells × dim`
+    * `centroids` to column `v` (squared norm `nrm`), first max on ties —
+    * [[graft.functions.CoarseArgmax]], which throws on a NaN similarity.
+    */
+  private def coarseArgmax(centroids: Seq[Double], sqrtNorms: Seq[Double]): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(graft.functions.CoarseArgmax(
+      org.apache.spark.sql.GraftSqlBridge.expression(col("v")),
+      org.apache.spark.sql.GraftSqlBridge.expression(col("nrm")),
+      centroids, sqrtNorms))
+
   /** 1-row (probe_v, probe_nrm) frame from a literal probe vector — the
     * at-scale probe shape (SURVEY §7.4): a query vector arrives as a
     * parameter, never as a corpus lookup, so the plan contains exactly one
@@ -406,9 +416,10 @@ object Similarity {
         "trainKMeans: no trainable vectors (corpus empty, sampled to " +
           "empty at this sampleFraction, or all zero-norm) — nothing to " +
           "seed a codebook from")
+      val dim = cents.head._2.size
       for (_ <- 1 to iters) {
         // The centroids are driver-resident METADATA (k×dim doubles), so
-        // assignment embeds them as plan literals and runs entirely
+        // assignment carries them inside its expression and runs entirely
         // map-side. The earlier formulation broadcast-crossJoined the
         // codebook (k× row expansion) and then shuffled every expanded
         // row, VECTORS INCLUDED, through a groupBy(vec_id) argmax plus a
@@ -418,23 +429,22 @@ object Similarity {
         // ways — per-iteration cost there is job scheduling, not data —
         // so the rewrite is a SCALE-shape change (zero vector bytes
         // shuffled per iteration), not a fixture speedup.
-        val dim = cents.head._2.size
-        // one similarity per cell, assembled into ONE array column: an
-        // argmax via array_max + array_position evaluates the array at
-        // most twice per row (a when/greatest fold was measured 2×
-        // SLOWER than the crossJoin it replaced — conditional branches
-        // defeat common-subexpression elimination, re-evaluating each
-        // vec_dot O(k) times). array_position takes the FIRST occurrence
-        // of the max — the lower-cell-index tiebreak the former max_by
-        // struct encoded. `cents` indices are 0..k-1 in sequence order by
-        // construction (seeding zipWithIndex; updates are keyed in
-        // place), so position−1 IS the cell index.
-        val csims = cents.map { case (_, cv) =>
-          val cnrm = math.max(cv.map(x => x * x).sum, 1e-300)
-          dot(col("v"), litVec(cv)) /
-            (sqrt(col("nrm")) * lit(math.sqrt(cnrm)))
-        }
-        val sims = array(csims: _*)
+        // argmax as ONE codegen loop over referenced centroid arrays
+        // ([[graft.functions.CoarseArgmax]], as [[ivfOn]] assigns): the
+        // first max wins, the lower-cell-index tiebreak, and `cents`
+        // indices are 0..k-1 in sequence order by construction (seeding
+        // zipWithIndex; updates are keyed in place), so the result IS the
+        // cell index. A ragged vector yields a null cell, which the guard
+        // below reports; a NaN similarity throws, naming the cell. The
+        // flat centroid array needs every cell at `dim`: a ragged seed
+        // fails here with the guard's message.
+        require(cents.forall(_._2.size == dim),
+          s"trainKMeans: a seed vector with size != $dim — ragged " +
+            "embeddings would silently bias the codebook; clean or filter " +
+            "the corpus first")
+        val argmax = coarseArgmax(cents.flatMap(_._2), cents.map { case (_, cv) =>
+          math.sqrt(math.max(cv.map(x => x * x).sum, 1e-300))
+        })
         // The per-dimension mean sum(v[i])/cn assumes every vector has
         // exactly `dim` elements: a shorter vector's missing dims would
         // skew the mean (sum skips, cn counts) and a longer vector's tail
@@ -447,15 +457,14 @@ object Similarity {
           sum(get(col("v"), lit(i))).as(s"s$i")) :+
           sum((size(col("v")) =!= dim).cast("long")).as("ragged")
         val means = e
-          .select((array_position(sims, array_max(sims)) - 1)
-            .cast("int").as("cell"), col("v"))
+          .select(argmax.as("cell"), col("v"))
           .groupBy("cell")
           .agg(count(lit(1)).as("cn"), sums: _*)
           .collect()
           .map { r =>
             // check ragged BEFORE reading cell: ragged rows get a null
-            // argmax (null dot → null array_max) and group under a null
-            // cell, so getInt(0) would throw a cryptic ROW_VALUE_IS_NULL.
+            // argmax and group under a null cell, so getInt(0) would
+            // throw a cryptic ROW_VALUE_IS_NULL.
             // The ragged counter itself reads null-safely: a group of
             // only NULL vectors sums the counter to SQL NULL (size(null)
             // is null, never counted as ragged), and a bare getLong
@@ -626,20 +635,17 @@ object Similarity {
     // no direction to assign against, and an unguarded one would
     // DIVIDE_BY_ZERO under the ANSI default
     val centsUsable = cents.filter(col("c_nrm") > 0)
-    // MAP-SIDE assignment via plan-literal centroids (r16 verdict #2):
-    // the codebook is driver-resident METADATA (tiny by construction —
-    // k-means codebooks are ≤ a few thousand entries), so collect it once
-    // and embed the centroids as literals, argmax via array_position(sims,
-    // array_max(sims)) — exactly the shape [[trainKMeans]] already uses
-    // (`:410-431`) and for the same reason. The former broadcast-crossJoin
+    // MAP-SIDE assignment (r16 verdict #2): the codebook is driver-resident
+    // METADATA (tiny by construction — k-means codebooks are ≤ a few
+    // thousand entries), so collect it once and assign inside one
+    // expression, as [[trainKMeans]] does. The former broadcast-crossJoin
     // + max_by(struct(label, v, nrm, c_id)) expanded EVERY corpus vector
     // ×|codebook| with its full 64-dim array inside a struct before the
     // partial agg collapsed it — measured as the bench's top GC line
     // (q_sim_ivf task GC 23.7 s in BENCH_r16) — and at 100 TB it shuffles
     // one full-vector row per corpus vector. This shape shuffles NOTHING
-    // for assignment and allocates no per-row structs. array_position
-    // takes the FIRST max, and the sims array is ordered by c_idx, so the
-    // tiebreak (highest csim, ties → lowest c_idx) is unchanged.
+    // for assignment; the cells are ordered by c_idx, so the tiebreak
+    // (highest csim, ties → lowest c_idx) is the first max.
     // bounded collect: a coarse codebook is ≤ a few thousand cells BY
     // CONSTRUCTION (trainKMeans k, or a label domain); a high-cardinality
     // label column is not a quantizer, and silently collecting it would
@@ -669,12 +675,7 @@ object Similarity {
     // pruned scan, and the vector family's cache A/Bs have lost twice
     // (Similarity/Dedup round-5/round-10 notes) — two codegen'd scans beat
     // materializing full-vector rows
-    val argmax = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.CoarseArgmax(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("v")),
-        org.apache.spark.sql.GraftSqlBridge.expression(col("nrm")),
-        cb.toSeq.flatMap(_._2),
-        cb.toSeq.map(c => math.sqrt(c._3))))
+    val argmax = coarseArgmax(cb.toSeq.flatMap(_._2), cb.toSeq.map(c => math.sqrt(c._3)))
     val assigned = e.withColumn("list_id",
       element_at(listIds, argmax + 1))
     // probe: its nprobe nearest centroids select the inverted lists to
@@ -1028,12 +1029,8 @@ object Similarity {
     // + debug-codegen evidence, OPTIMIZATION_r22.md). Semantics are
     // bit-identical (same fold order, same sqrt constants, first-max
     // tiebreak = array_position's first-match rule; pin-gated ×3 SFs).
-    val argmax = org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.CoarseArgmax(
-        org.apache.spark.sql.GraftSqlBridge.expression(col("v")),
-        org.apache.spark.sql.GraftSqlBridge.expression(col("nrm")),
-        coarse.flatMap(_._2.toSeq).toSeq,
-        coarse.map(c => math.sqrt(c._3)).toSeq))
+    val argmax = coarseArgmax(coarse.flatMap(_._2.toSeq).toSeq,
+      coarse.map(c => math.sqrt(c._3)).toSeq)
     val enc = if (pq.residual) {
       val flat = requireResidualPairing(pq, coarse)
       org.apache.spark.sql.GraftSqlBridge.column(

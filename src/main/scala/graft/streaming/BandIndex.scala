@@ -381,9 +381,9 @@ object BandIndex {
     *     lifetime; most compactions do only the L0 merge.
     *
     * Probe cost after compaction: per bucket ≤ (epochs since last compact)
-    * delta files + ≤ TierFanout·log₄(corpus) run files — O(log corpus),
-    * measured flat by `graft.DedupBench` (per-tier file counts in the
-    * artifact).
+    * delta files + ≤ TierFanout·log₄(corpus) run files — O(log corpus);
+    * perfbench's `dedup_stream` reports the index's shape and probe cost
+    * as its `bandindex.*` metrics (files, bytes, read_keys_ms).
     *
     * Designed to run SERIALLY with the writer — [[StreamingNearDedup]]
     * calls it inside foreachBatch every `compactEvery` epochs under the
@@ -437,9 +437,10 @@ object BandIndex {
     }
   }
 
-  /** Per-tier shape of the index, for tests and `graft.DedupBench`'s
-    * file-count evidence: how many per-epoch delta ids, how many compacted
-    * runs, and the worst per-bucket file count a probe could open.
+  /** Per-tier shape of the index, for tests (perfbench's `dedup_stream`
+    * reports the whole index as `bandindex.files`/`bandindex.bytes`): how
+    * many per-epoch delta ids, how many compacted runs, and the worst
+    * per-bucket file count a probe could open.
     */
   private[graft] case class IndexStats(
       deltaEpochs: Int, runs: Int, maxFilesPerBucket: Int)

@@ -74,4 +74,34 @@ class EntryContractSpec extends AnyFunSuite {
     assert(line.length - line.indexOf("\"vs_baseline\"") < 2000)
     assert(line.lastIndexOf("\"value\"") > line.indexOf("\"queries\""))
   }
+
+  test("bench SPARK_GRAFT_CONF parse: blank keys skipped, values whole, trimmed") {
+    assert(Bench.confOverrides(" =v") === Nil, "a blank key is skipped")
+    assert(Bench.confOverrides("novalue") === Nil, "a pair without = is skipped")
+    assert(Bench.confOverrides("k=a=b") === Seq("k" -> "a=b"),
+      "a value holding = is kept whole")
+    assert(Bench.confOverrides(" spark.a = 1 , ,spark.b=x ") ===
+      Seq("spark.a" -> "1", "spark.b" -> "x"), "keys and values are trimmed")
+  }
+
+  test("one session policy: SparkSession.builder only in MainSession and the sink examples") {
+    // every measurement main starts its session through MainSession; a new
+    // hand-copied builder would let one main's settings drift from the rest
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no ${root.toAbsolutePath}")
+    val allowed = Set("graft/MainSession.scala",
+      "graft/sink/RateSinkExample.scala", "graft/sink/SocketSinkExample.scala")
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(root)
+    val copies = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession.builder"))
+      .map(p => root.relativize(p).toString.replace('\\', '/'))
+      .toSet
+    finally walk.close()
+    assert(copies -- allowed === Set.empty[String],
+      "start the session with MainSession.start instead")
+    assert(copies === allowed, "the allowed builders moved; update this list")
+  }
 }

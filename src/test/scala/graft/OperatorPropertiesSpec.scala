@@ -1738,6 +1738,20 @@ class OperatorPropertiesSpec extends SparkSpec {
         expr("CASE WHEN vec_id = 5 THEN NULL ELSE embedding END"))
     assert(Similarity.trainKMeans(nulled, k = 4, iters = 2, seed = 42L)
       .count() === 4L, "null embeddings are skipped, not fatal")
+    // a NaN component has no place in the cosine order: the assignment
+    // must fail naming the cell, not rank it first and pull every later
+    // row into that cell
+    val nan = Tables.embeddings(spark, sf0001)
+      .withColumn("embedding", expr(
+        "CASE WHEN vec_id = 5 THEN concat(array(CAST('NaN' AS FLOAT)), " +
+          "slice(embedding, 2, size(embedding) - 1)) ELSE embedding END"))
+    val nanEx = intercept[Exception] {
+      Similarity.trainKMeans(nan, k = 4, iters = 2, seed = 42L).collect()
+    }
+    val nanMsgs = Iterator.iterate[Throwable](nanEx)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(nanMsgs.contains("coarse_argmax: the similarity to coarse cell"),
+      s"expected CoarseArgmax's NaN guard to fire, got: $nanMsgs")
   }
 
   test("brute-force cosine top-k dominates the ANN shortlist (recall sanity)") {
