@@ -354,6 +354,20 @@ object Compact {
   private def sizeClass(bytes: Long): Int =
     (64 - java.lang.Long.numberOfLeadingZeros(math.max(bytes, 1L))) / 2
 
+  /** Greedy chunking of a byte-level merge's inputs on input boundaries,
+    * in input order: a chunk closes once it holds something and the next
+    * input would push it past `targetBytes` (`ParquetIO.merge`,
+    * `OrcIO.merge`).
+    */
+  private[sink] def sizeChunks[A](inputs: Seq[A], targetBytes: Long)(
+      size: A => Long): Seq[Seq[A]] =
+    inputs.foldLeft((Vector.empty[Vector[A]], 0L)) { case ((acc, bytes), in) =>
+      val sz = size(in)
+      if (acc.isEmpty) (Vector(Vector(in)), sz)
+      else if (bytes + sz > targetBytes) (acc :+ Vector(in), sz)
+      else (acc.init :+ (acc.last :+ in), bytes + sz)
+    }._1
+
   private def doRun(
       log: CommitLog,
       fileSystem: org.apache.hadoop.fs.FileSystem,

@@ -204,7 +204,7 @@ object FileStats {
       r.map { rows =>
         val cols = tokens.drop(1).map { t =>
           val Array(name, nc, mn, mx) = t.split(":", -1)
-          GraftPartitionReader.unsanitizePublic(name) -> ColStats(
+          GraftPartitionReader.unsanitize(name) -> ColStats(
             if (nc == "-") None else Some(nc.toLong),
             if (mn == "-") None else Some(unsanitizeTagged(mn)),
             if (mx == "-") None else Some(unsanitizeTagged(mx)))
@@ -214,7 +214,7 @@ object FileStats {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   private def unsanitizeTagged(tok: String): String =
-    tok.head + GraftPartitionReader.unsanitizePublic(tok.drop(1))
+    tok.head + GraftPartitionReader.unsanitize(tok.drop(1))
 
   /** Build stats from a parquet footer (the writer's in-memory one, or a
     * re-read after compaction). Only top-level primitive columns of

@@ -88,8 +88,11 @@ final class GraftMicroBatchStream(
     }.toArray
   }
 
+  // the tail reads rows; which parquet decoder serves them is decided here,
+  // on the driver, as for a batch scan
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(requiredSchema, conf)
+    GraftReaderFactory(requiredSchema, conf,
+      parquetBatches = ParquetIO.batchReadSupported(requiredSchema))
 
   override def commit(end: Offset): Unit = ()
 

@@ -8,7 +8,9 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -23,6 +25,12 @@ import org.apache.spark.util.SerializableConfiguration
   * is pushed into the parse: only requested fields are decoded, and
   * partition columns are served from the directory path without touching
   * file bytes.
+  *
+  * Two partition readers: [[GraftColumnarReader]] decodes a parquet or
+  * ORC file into column vectors and attaches the partition values, and
+  * [[GraftPartitionReader]] — the row scan, which the streaming tail also
+  * uses — iterates that reader's batches, decoding row by row only JSONL
+  * and a parquet projection Spark's vectorized decoder rejects.
   */
 final class GraftScanBuilder(tableSchema: StructType, opts: GraftSinkOptions)
   extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -106,53 +114,56 @@ final class GraftScan(
       GraftInputPartition(f, parts): InputPartition
     }.toArray
 
-  /** Columnar (vectorized) batches when EVERY planned file is parquet
-    * (Spark's vectorized parquet decoder) and the projection is
-    * batch-decodable, or EVERY planned file is ORC ([[OrcIO.BatchReader]],
-    * whose views serve every type the ORC landing writes). Spark requires
-    * a scan's partitions to be uniformly columnar or row-based, so one
-    * JSONL epoch — or a parquet/ORC mix — keeps the whole scan on the row
-    * path.
+  /** Whether Spark's vectorized parquet decoder takes this projection;
+    * decided here, on the driver, for the columnar gate and for the row
+    * scan's choice of parquet decoder.
+    */
+  private lazy val parquetBatches = ParquetIO.batchReadSupported(requiredSchema)
+
+  /** Columnar (vectorized) batches from [[GraftColumnarReader]] when no
+    * planned file is JSONL and either none is parquet or the projection
+    * is one Spark's vectorized parquet decoder takes; a parquet + ORC
+    * table scans columnar too. Spark requires a scan's partitions to be
+    * uniformly columnar or row-based, so one JSONL epoch keeps the whole
+    * scan on the row path.
     */
   private[sink] lazy val columnar: Boolean =
     plannedFiles.nonEmpty && requiredSchema.nonEmpty &&
-      ((plannedFiles.forall(_._1.endsWith(".parquet")) &&
-          ParquetIO.batchReadSupported(requiredSchema)) ||
-        plannedFiles.forall(_._1.endsWith(".orc")))
+      !plannedFiles.exists(_._1.endsWith(".jsonl")) &&
+      (parquetBatches || !plannedFiles.exists(_._1.endsWith(".parquet")))
 
   // once per scan, however often Spark asks for a reader factory
   private lazy val taskConf =
     TaskConf.broadcast(org.apache.spark.sql.SparkSession.active.sparkContext)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftReaderFactory(requiredSchema, taskConf,
-      columnar = columnar,
-      filters = pushedSourceFilters)
+    GraftReaderFactory(requiredSchema, taskConf, parquetBatches,
+      columnar = columnar, filters = pushedSourceFilters)
 }
 
 final case class GraftInputPartition(
     file: String, partitionValues: Map[String, String]) extends InputPartition
 
+/** `parquetBatches`: whether parquet files are read through
+  * [[GraftColumnarReader]] — [[ParquetIO.batchReadSupported]] of the
+  * projection, decided on the driver.
+  */
 final case class GraftReaderFactory(
     requiredSchema: StructType, conf: Broadcast[SerializableConfiguration],
+    parquetBatches: Boolean,
     columnar: Boolean = false,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
   extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftPartitionReader(p, requiredSchema, conf.value.value, filters)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition],
+      requiredSchema, conf.value.value, filters, parquetBatches)
 
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    if (p.file.endsWith(".orc"))
-      new GraftOrcColumnarReader(p, requiredSchema, conf.value.value, filters)
-    else new GraftColumnarReader(p, requiredSchema, conf.value.value, filters)
-  }
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
+      requiredSchema, conf.value.value, filters)
 }
 
 object GraftScan {
@@ -220,120 +231,73 @@ object GraftScan {
     }
 }
 
-/** Vectorized parquet scan of one committed file: Spark's columnar decoder
-  * fills `ColumnVector`s straight from the column chunks (no row
-  * materialization), partition columns ride along as constant vectors, and
-  * the batch's columns are re-ordered to the projection's field order
-  * (`initBatch` appends partition columns at the end).
+/** Columnar scan of one committed parquet or ORC file. The file's
+  * non-partition projection is decoded by Spark's vectorized parquet
+  * reader ([[ParquetIO.createVectorizedReader]]) or by
+  * [[OrcIO.BatchReader]]; each keeps one vector set per file, refilled in
+  * place. The batch is built once, in projection order: the file's
+  * vectors matched by name (a field the file lacks reads as null), plus
+  * each partition column as a constant vector.
   */
 final class GraftColumnarReader(
     partition: GraftInputPartition, requiredSchema: StructType,
     conf: org.apache.hadoop.conf.Configuration,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  private val isPart: Array[Boolean] =
-    requiredSchema.fields.map(f => partition.partitionValues.contains(f.name))
-  private val fileSchema = StructType(
-    requiredSchema.fields.zip(isPart).collect { case (f, false) => f })
-  private val partSchema = StructType(
-    requiredSchema.fields.zip(isPart).collect { case (f, true) => f })
-  private val partRow = new GenericInternalRow(
-    partSchema.fields.map(f => GraftPartitionReader.fromPathString(
-      partition.partitionValues(f.name), f.dataType)).toArray[Any])
-  // batch column i of the projection lives at: fileIdx within the file
-  // columns, or fileCount + partIdx for partition constants
-  private val reorder: Array[Int] = {
-    var fi = 0; var pi = 0
-    requiredSchema.fields.indices.map { i =>
-      if (isPart(i)) { val r = fileSchema.length + pi; pi += 1; r }
-      else { val r = fi; fi += 1; r }
-    }.toArray
-  }
-
-  private val reader = ParquetIO.createVectorizedReader(
-    new Path(partition.file), fileSchema, partSchema, partRow, conf,
-    filters.toSeq)
-  private var batch: org.apache.spark.sql.vectorized.ColumnarBatch = _
-  // the reorder permutation and the underlying vectors are fixed per
-  // file, so the identity test runs once and the reordered batch wrapper
-  // is built once and re-wrapped only when the source batch instance
-  // changes — not a fresh allocation per batch in the hot scan loop
-  private val identityOrder = reorder.indices.forall(i => reorder(i) == i)
-  private var lastSource: org.apache.spark.sql.vectorized.ColumnarBatch = _
-  private var reordered: org.apache.spark.sql.vectorized.ColumnarBatch = _
-
-  override def next(): Boolean = {
-    if (!reader.nextKeyValue()) { batch = null; false }
-    else {
-      val b = reader.getCurrentValue
-        .asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-      batch =
-        if (identityOrder) b
-        else {
-          if (b ne lastSource) {
-            lastSource = b
-            reordered = new org.apache.spark.sql.vectorized.ColumnarBatch(
-              reorder.map(b.column), b.numRows())
-          } else reordered.setNumRows(b.numRows())
-          reordered
-        }
-      true
-    }
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-
-  override def close(): Unit = reader.close()
-}
-
-/** Vectorized ORC scan of one committed file (the ORC counterpart of
-  * [[GraftColumnarReader]]): the [[OrcIO.BatchReader]]'s vectors — views
-  * over the hive batches, null constants for fields the file lacks — plus
-  * partition columns as `ConstantColumnVector`s, assembled once in
-  * projection order: no per-batch reorder, no per-row materialization.
-  */
-final class GraftOrcColumnarReader(
-    partition: GraftInputPartition, requiredSchema: StructType,
-    conf: org.apache.hadoop.conf.Configuration,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-  extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
+  extends PartitionReader[ColumnarBatch] {
 
   private val fileSchema = StructType(requiredSchema.fields
     .filterNot(f => partition.partitionValues.contains(f.name)))
-  private val reader = new OrcIO.BatchReader(
-    new Path(partition.file), fileSchema, conf, filters.toSeq)
+  private val path = new Path(partition.file)
 
-  private val batch = {
-    val fileVectors = fileSchema.fieldNames.zip(reader.vectors).toMap
-    new org.apache.spark.sql.vectorized.ColumnarBatch(requiredSchema.fields.map { f =>
-      partition.partitionValues.get(f.name) match {
-        case Some(v) =>
-          val c = new ConstantColumnVector(OrcIO.BatchRows, f.dataType)
-          ColumnVectorUtils.populate(c,
-            InternalRow(GraftPartitionReader.fromPathString(v, f.dataType)), 0)
-          c
-        case None => fileVectors(f.name)
-      }
-    })
-  }
+  // the file's vectors, in `fileSchema` order, and how to refill them
+  private val (fileBatch, nextFileBatch, closeFile) =
+    if (partition.file.endsWith(".orc")) {
+      val r = new OrcIO.BatchReader(path, fileSchema, conf, filters.toSeq)
+      (r.batch, () => r.nextBatch(), () => r.close())
+    } else {
+      val r = ParquetIO.createVectorizedReader(path, fileSchema, conf, filters.toSeq)
+      (r.resultBatch(), () => r.nextBatch(), () => r.close())
+    }
 
-  override def next(): Boolean = {
-    if (!reader.nextBatch()) false
-    else { batch.setNumRows(reader.batch.numRows); true }
-  }
+  private val batch = new ColumnarBatch(requiredSchema.fields.map { f =>
+    partition.partitionValues.get(f.name) match {
+      case Some(v) =>
+        val c = new ConstantColumnVector(GraftColumnarReader.BatchRows, f.dataType)
+        ColumnVectorUtils.populate(c,
+          InternalRow(GraftPartitionReader.fromPathString(v, f.dataType)), 0)
+        c
+      case None => fileBatch.column(fileSchema.fieldIndex(f.name))
+    }
+  })
 
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
+  override def next(): Boolean =
+    nextFileBatch() && { batch.setNumRows(fileBatch.numRows); true }
 
-  override def close(): Unit = reader.close()
+  override def get(): ColumnarBatch = batch
+
+  override def close(): Unit = closeFile()
 }
 
+object GraftColumnarReader {
+  /** Rows per decoded batch of either format, and the capacity of the
+    * partition constants beside them.
+    */
+  private[sink] val BatchRows = 4096
+}
+
+/** Row scan of one committed file, in projection order with partition
+  * values attached. A `.orc` file, and a `.parquet` file when
+  * `parquetBatches` holds, yields the rows of [[GraftColumnarReader]]'s
+  * batches. A JSONL file, or a parquet projection Spark's vectorized
+  * decoder rejects ([[ParquetIO.batchReadSupported]]: UDT or variant
+  * columns, or its vectorized reader switched off), is decoded row by row
+  * and each row copied into projection order beside the partition values.
+  */
 final class GraftPartitionReader(
     partition: GraftInputPartition, requiredSchema: StructType,
     conf: org.apache.hadoop.conf.Configuration,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+    parquetBatches: Boolean = true)
   extends PartitionReader[InternalRow] {
 
   // fields served from the path (partition columns) vs the file bytes
@@ -349,14 +313,44 @@ final class GraftPartitionReader(
     .map(_._2)
   private val path = new Path(partition.file)
 
-  /** Per-file row decode, dispatched on the committed file's extension so a
-    * table may mix JSONL and parquet epochs (the landing format is a
-    * per-write option). Returns null at EOF.
-    */
+  /** The next row, or null at EOF. */
   private sealed trait RowSource {
     def nextRow(): InternalRow
     def close(): Unit
   }
+
+  private final class BatchSource extends RowSource {
+    private val reader = new GraftColumnarReader(partition, requiredSchema,
+      conf, filters)
+    private var rows: java.util.Iterator[InternalRow] =
+      java.util.Collections.emptyIterator()
+    override def nextRow(): InternalRow = {
+      while (!rows.hasNext) {
+        if (!reader.next()) return null
+        rows = reader.get().rowIterator()
+      }
+      rows.next()
+    }
+    override def close(): Unit = reader.close()
+  }
+
+  /** A row decoded from the file (in `fileSchema` order) copied into
+    * projection order beside the partition values; null (EOF) stays null.
+    */
+  private def fill(fileRow: InternalRow): InternalRow =
+    if (fileRow == null) null
+    else {
+      val values = new Array[Any](requiredSchema.length)
+      var i = 0
+      while (i < fileOrdinals.length) {
+        values(fileOrdinals(i)) =
+          if (fileRow.isNullAt(i)) null
+          else fileRow.get(i, fileSchema.fields(i).dataType)
+        i += 1
+      }
+      partOrdinals.foreach { case (ord, v) => values(ord) = v }
+      new GenericInternalRow(values)
+    }
 
   private final class JsonlSource extends RowSource {
     private val decoder = new JsonRowDecoder(fileSchema)
@@ -370,61 +364,31 @@ final class GraftPartitionReader(
       // silently truncate every row after the first blank
       var line = in.readLine()
       while (line != null && line.isEmpty) line = in.readLine()
-      if (line == null) null else decoder.decode(line)
+      if (line == null) null else fill(decoder.decode(line))
     }
     override def close(): Unit = in.close()
   }
 
-  /** Columnar scan: `fileSchema` is pushed into the parquet read, so only
-    * the projected columns' chunks are decoded ([[ParquetIO.createReader]]).
+  /** Parquet's row decoder, for a projection the vectorized one rejects:
+    * `fileSchema` is pushed into the read, so only the projected columns'
+    * chunks are decoded ([[ParquetIO.createReader]]).
     */
-  private final class ParquetSource extends RowSource {
+  private final class ParquetRowSource extends RowSource {
     private val reader = ParquetIO.createReader(path, fileSchema, conf)
-    override def nextRow(): InternalRow = reader.read()
-    override def close(): Unit = reader.close()
-  }
-
-  /** ORC scan: the rows of the same [[OrcIO.BatchReader]] batches the
-    * columnar scan reads — one decode path, with the same projection mask
-    * and stripe/row-group SearchArgument skipping.
-    */
-  private final class OrcSource extends RowSource {
-    private val reader = new OrcIO.BatchReader(path, fileSchema, conf,
-      filters.toSeq)
-    private var rows: java.util.Iterator[InternalRow] =
-      java.util.Collections.emptyIterator()
-    override def nextRow(): InternalRow = {
-      while (!rows.hasNext) {
-        if (!reader.nextBatch()) return null
-        rows = reader.batch.rowIterator()
-      }
-      rows.next()
-    }
+    override def nextRow(): InternalRow = fill(reader.read())
     override def close(): Unit = reader.close()
   }
 
   private val source: RowSource =
-    if (partition.file.endsWith(".parquet")) new ParquetSource
-    else if (partition.file.endsWith(".orc")) new OrcSource
-    else new JsonlSource
+    if (partition.file.endsWith(".jsonl")) new JsonlSource
+    else if (partition.file.endsWith(".parquet") && !parquetBatches)
+      new ParquetRowSource
+    else new BatchSource
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    val fileRow = source.nextRow()
-    if (fileRow == null) { current = null; false }
-    else {
-      val values = new Array[Any](requiredSchema.length)
-      var i = 0
-      while (i < fileOrdinals.length) {
-        values(fileOrdinals(i)) =
-          if (fileRow.isNullAt(i)) null
-          else fileRow.get(i, fileSchema.fields(i).dataType)
-        i += 1
-      }
-      partOrdinals.foreach { case (ord, v) => values(ord) = v }
-      current = new GenericInternalRow(values)
-      true
-    }
+    current = source.nextRow()
+    current != null
   }
 
   override def get(): InternalRow = current
@@ -450,16 +414,14 @@ object GraftPartitionReader {
     }
   }
 
-  /** [[unsanitize]] for the other percent-encoded consumers (manifest
-    * stats tokens share the path encoding).
+  /** Percent-decoding of a path value; manifest stats tokens share the
+    * encoding ([[FileStats]]).
     */
-  private[sink] def unsanitizePublic(s: String): String = unsanitize(s)
-
-  private def unsanitize(s: String): String = {
+  private[sink] def unsanitize(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 2 < s.length + 1 && i + 3 <= s.length) {
+      if (s.charAt(i) == '%' && i + 3 <= s.length) {
         sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
         i += 3
       } else { sb.append(s.charAt(i)); i += 1 }

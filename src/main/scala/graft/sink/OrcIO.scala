@@ -278,15 +278,10 @@ object OrcIO {
       out.getStreamOptions
   }
 
-  /** Rows per decoded batch, and the capacity of the constant vectors the
-    * scan puts beside the file's own.
-    */
-  private[sink] val BatchRows = 4096
-
   /** Spark [[org.apache.spark.sql.vectorized.ColumnVector]] VIEW over one
     * hive `ColumnVector` of a `VectorizedRowBatch` — the zero-copy bridge
     * that lets the ORC scan hand Spark COLUMNAR batches the way the
-    * parquet path does ([[GraftColumnarReader]]): no per-row
+    * parquet decoder does ([[GraftColumnarReader]]): no per-row
     * `InternalRow` materialization, values decoded lazily by position
     * straight from the ORC decode buffers. The wrapped hive vector object
     * is stable across `nextBatch` calls (ORC refills in place), so the
@@ -357,7 +352,7 @@ object OrcIO {
   }
 
   /** Reader over one committed ORC file, and the only ORC decode path:
-    * the columnar scan serves its batches ([[GraftOrcColumnarReader]]) and
+    * [[GraftColumnarReader]] serves its batches to the columnar scan, and
     * the row scan iterates their rows ([[GraftPartitionReader]]).
     *
     *  - COLUMN PRUNING: only the projected fields' streams are read and
@@ -399,17 +394,17 @@ object OrcIO {
         .foreach(opts.searchArgument(_, fileNames.toArray))
       reader.rows(opts)
     }
-    private val hiveBatch = fileTd.createRowBatch(BatchRows)
+    private val hiveBatch = fileTd.createRowBatch(GraftColumnarReader.BatchRows)
 
     /** Per requested field, in `requestedSchema` order: its view over the
       * file's column, or a null constant when the file lacks the field.
       */
-    val vectors: Array[org.apache.spark.sql.vectorized.ColumnVector] =
+    private val vectors: Array[org.apache.spark.sql.vectorized.ColumnVector] =
       requestedSchema.fields.zip(fileCol).map {
         case (f, c) if c >= 0 => new OrcSparkColumnVector(f.dataType, hiveBatch.cols(c))
         case (f, _) =>
           val v = new org.apache.spark.sql.execution.vectorized
-            .ConstantColumnVector(BatchRows, f.dataType)
+            .ConstantColumnVector(GraftColumnarReader.BatchRows, f.dataType)
           v.setNull(); v
       }
     private val views = vectors.collect { case v: OrcSparkColumnVector => v }
@@ -536,15 +531,7 @@ object OrcIO {
     val written = scala.collection.mutable.ArrayBuffer.empty[Path]
     val consumed = scala.collection.mutable.ArrayBuffer.empty[Path]
     bySchema.foreach { group =>
-      // greedy size chunking on input boundaries, like ParquetIO.merge
-      val chunks = group.foldLeft((Vector.empty[Vector[(Path, String, Long)]], 0L)) {
-        case ((acc, bytes), in @ (_, _, sz)) =>
-          if (acc.nonEmpty && acc.last.nonEmpty && bytes + sz > targetBytes)
-            (acc :+ Vector(in), sz)
-          else if (acc.isEmpty) (Vector(Vector(in)), sz)
-          else (acc.init :+ (acc.last :+ in), bytes + sz)
-      }._1
-      chunks.foreach { chunk =>
+      Compact.sizeChunks(group, targetBytes)(_._3).foreach { chunk =>
         outIdx += 1
         val target = targetFor(outIdx)
         val merged = OrcFile.mergeFiles(target,

@@ -26,9 +26,12 @@ import org.apache.spark.sql.types.StructType
   *    parquet datasource uses), snappy-compressed; a column is
   *    dictionary-encoded unless the table's last probe file dropped its
   *    dictionary ([[plainColumns]], chosen per file by [[GraftDataWriter]]);
-  *  - read: `ParquetReader` over Spark's `ParquetReadSupport` with the
-  *    requested schema pushed into the parquet scan — column pruning reaches
-  *    the page level, so a 2-column projection of a 20-column table reads 2
+  *  - read: Spark's vectorized decoder ([[createVectorizedReader]], which
+  *    [[GraftColumnarReader]] serves to both the columnar and the row
+  *    scan), or for a projection it rejects, `ParquetReader` over Spark's
+  *    `ParquetReadSupport` ([[createReader]]); either way the requested
+  *    schema is pushed into the parquet scan — column pruning reaches the
+  *    page level, so a 2-column projection of a 20-column table reads 2
   *    column chunks, not 20 (the scan story JSONL structurally cannot have);
   *  - compact: `ParquetFileWriter.appendFile` row-group concatenation — a
   *    byte-level copy of the compressed pages with no decode/re-encode, the
@@ -138,18 +141,15 @@ object ParquetIO {
           !p.toArray.exists(_.contains(".")) => p.toDotString }
       .toSet
 
-  /** Reader returning `InternalRow`s in `requestedSchema` field order.
-    * The requested schema is pushed into the parquet scan (only its column
-    * chunks are read); fields absent from the file materialize as null.
+  /** A copy of `conf` that requests `requestedSchema` from Spark's
+    * `ParquetReadSupport`. The parquet→catalyst schema converter asserts
+    * its conf keys are present (its Configuration ctor does a bare
+    * .toBoolean on each), so they are pinned to their defaults.
     */
-  def createReader(
-      path: Path, requestedSchema: StructType,
-      conf: Configuration): ParquetReader[InternalRow] = {
+  private def readConf(conf: Configuration, requestedSchema: StructType): Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val c = new Configuration(conf)
     c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requestedSchema.json)
-    // the parquet→catalyst schema converter asserts these are present (its
-    // Configuration ctor does a bare .toBoolean on each); pin defaults
     Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
       SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
       SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
@@ -157,38 +157,40 @@ object ParquetIO {
       SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
       SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
       .foreach(e => c.set(e.key, e.defaultValueString))
+    c
+  }
+
+  /** Row reader returning `InternalRow`s in `requestedSchema` field order,
+    * for a projection Spark's vectorized decoder rejects
+    * ([[batchReadSupported]]). The requested schema is pushed into the
+    * parquet scan (only its column chunks are read); fields absent from
+    * the file materialize as null.
+    */
+  def createReader(
+      path: Path, requestedSchema: StructType,
+      conf: Configuration): ParquetReader[InternalRow] =
     // no-arg ParquetReadSupport pins datetimeRebase=CORRECTED — the mode
     // every file this sink writes was written with
-    ParquetReader.builder(new ParquetReadSupport(), path).withConf(c).build()
-  }
+    ParquetReader.builder(new ParquetReadSupport(), path)
+      .withConf(readConf(conf, requestedSchema)).build()
 
   /** VECTORIZED batch reader over one sink parquet file — Spark's own
     * columnar decoder (`VectorizedParquetRecordReader`), the scan engine
     * behind its native parquet source: column chunks decode straight into
     * `ColumnVector`s, rows are never materialized, and downstream
-    * whole-stage codegen consumes the batches directly. Partition columns
-    * are appended as constant vectors via `initBatch`. Rebase pins match
-    * [[pinnedWriterConf]] (CORRECTED / UTC), so the files this sink writes
-    * round-trip bit-exactly.
+    * whole-stage codegen consumes the batches directly. The batch holds
+    * `fileSchema`'s columns only ([[GraftColumnarReader]] attaches the
+    * partition values) and is allocated once, by `initBatch`. Rebase pins
+    * match [[pinnedWriterConf]] (CORRECTED / UTC), so the files this sink
+    * writes round-trip bit-exactly.
     */
   def createVectorizedReader(
-      path: Path, fileSchema: StructType,
-      partitionSchema: StructType, partitionValues: InternalRow,
-      conf: Configuration,
+      path: Path, fileSchema: StructType, conf: Configuration,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
       : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = {
-    import org.apache.spark.sql.internal.SQLConf
-    val c = new Configuration(conf)
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, fileSchema.json)
+    val c = readConf(conf, fileSchema)
     c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
-    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
-      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
-      SQLConf.PARQUET_IGNORE_VARIANT_ANNOTATION,
-      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
-      .foreach(e => c.set(e.key, e.defaultValueString))
     // push the query's filters into the parquet scan: row groups whose
     // column statistics contradict a predicate are skipped whole, and
     // column indexes prune at page granularity — at 100 TB this is the
@@ -225,9 +227,9 @@ object ParquetIO {
     val reader = new org.apache.spark.sql.execution.datasources.parquet
       .VectorizedParquetRecordReader(
         java.time.ZoneId.of("UTC"), "CORRECTED", "UTC", "CORRECTED", "UTC",
-        /* useOffHeap = */ false, /* capacity = */ 4096)
+        /* useOffHeap = */ false, GraftColumnarReader.BatchRows)
     reader.initialize(split, ctx)
-    reader.initBatch(partitionSchema, partitionValues)
+    reader.initBatch(new StructType(), InternalRow.empty)
     reader.enableReturningBatches()
     reader
   }
@@ -279,18 +281,8 @@ object ParquetIO {
       .values.toSeq
     var outIdx = -1
     byFooter.flatMap { group =>
-      // greedy chunking on input-file boundaries: close a chunk once it
-      // holds something and the next input would push it past the target
-      val chunks = group.foldLeft(
-        (Vector.empty[Vector[(Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)]], 0L)) {
-        case ((acc, bytes), in @ (_, footer)) =>
-          val sz = footer.getBlocks.asScala.map(_.getCompressedSize).sum
-          if (acc.nonEmpty && acc.last.nonEmpty && bytes + sz > targetBytes)
-            (acc :+ Vector(in), sz)
-          else if (acc.isEmpty) (Vector(Vector(in)), sz)
-          else (acc.init :+ (acc.last :+ in), bytes + sz)
-      }._1
-      chunks.map { chunk =>
+      Compact.sizeChunks(group, targetBytes)(
+        _._2.getBlocks.asScala.map(_.getCompressedSize).sum).map { chunk =>
         outIdx += 1
         val target = targetFor(outIdx)
         val footer = chunk.head._2

@@ -445,8 +445,6 @@ class FileSkippingSpec extends SparkSpec {
           org.apache.spark.sql.types.StringType)))
       val r = ParquetIO.createVectorizedReader(
         new org.apache.hadoop.fs.Path(files.head), schema,
-        new org.apache.spark.sql.types.StructType(Array.empty),
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(0),
         spark.sparkContext.hadoopConfiguration, filters.toSeq)
       try {
         var n = 0L

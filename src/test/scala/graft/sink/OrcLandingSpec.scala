@@ -314,24 +314,51 @@ class OrcLandingSpec extends SparkSpec {
         StructField("ntz", TimestampNTZType)))
       val files = new CommitLog(s"$dir/testdb.t", hconf).committedFiles()
       assert(files.nonEmpty && files.forall(_.endsWith(".orc")))
-      def values(r: org.apache.spark.sql.catalyst.InternalRow) =
-        (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3))
-      val columnar = files.flatMap { f =>
-        val rd = new GraftOrcColumnarReader(
-          GraftInputPartition(f, Map.empty), schema, hconf)
-        try Iterator.continually(rd.next()).takeWhile(identity)
-          .flatMap(_ => rd.get().rowIterator().asScala.map(values)).toList
-        finally rd.close()
+      // each file's rows under `proj`, with `parts` as its partition
+      // values: (columnar path, row path)
+      def read(proj: StructType, parts: Map[String, String] = Map.empty) = {
+        def values(r: org.apache.spark.sql.catalyst.InternalRow): Seq[Any] =
+          proj.fields.indices.map { i =>
+            if (r.isNullAt(i)) null
+            else r.get(i, proj(i).dataType) match {
+              case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+              case v => v
+            }
+          }
+        val columnar = files.flatMap { f =>
+          val rd = new GraftColumnarReader(
+            GraftInputPartition(f, parts), proj, hconf)
+          try Iterator.continually(rd.next()).takeWhile(identity)
+            .flatMap(_ => rd.get().rowIterator().asScala.map(values)).toList
+          finally rd.close()
+        }
+        val rowPath = files.flatMap { f =>
+          val rd = new GraftPartitionReader(
+            GraftInputPartition(f, parts), proj, hconf)
+          try Iterator.continually(rd.next()).takeWhile(identity)
+            .map(_ => values(rd.get())).toList
+          finally rd.close()
+        }
+        def byId(rows: Seq[Seq[Any]]) = rows.sortBy(_.headOption match {
+          case Some(id: Int) => id
+          case _ => 0
+        })
+        (byId(columnar), byId(rowPath))
       }
-      val rowPath = files.flatMap { f =>
-        val rd = new GraftPartitionReader(
-          GraftInputPartition(f, Map.empty), schema, hconf)
-        try Iterator.continually(rd.next()).takeWhile(identity)
-          .map(_ => values(rd.get())).toList
-        finally rd.close()
-      }
-      assert(columnar.sortBy(_._1) === expected)
-      assert(rowPath.sortBy(_._1) === expected)
+      val rows = expected.map { case (i, d, ts, ntz) => Seq(i, d, ts, ntz) }
+      assert(read(schema) === (rows, rows))
+      // a partition column in the middle of the projection and a field
+      // the file lacks
+      val middle = StructType(Seq(StructField("id", IntegerType),
+        StructField("p", StringType), StructField("ts", TimestampType),
+        StructField("absent", StringType)))
+      val withPart = expected.map { case (i, _, ts, _) => Seq(i, "EU", ts, null) }
+      assert(read(middle, Map("p" -> "EU")) === (withPart, withPart))
+      // no file column read: a count, and a partition-only select
+      assert(read(StructType(Nil)) === (rows.map(_ => Nil), rows.map(_ => Nil)))
+      val pOnly = StructType(Seq(StructField("p", StringType)))
+      assert(read(pOnly, Map("p" -> "EU")) ===
+        (rows.map(_ => Seq("EU")), rows.map(_ => Seq("EU"))))
     } finally java.util.TimeZone.setDefault(saved)
   }
 

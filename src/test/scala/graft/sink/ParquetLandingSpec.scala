@@ -297,6 +297,31 @@ class ParquetLandingSpec extends SparkSpec {
     assert(planOf(pq.select("id", "msg")).contains("ColumnarToRow"),
       "an all-parquet table must plan a vectorized columnar scan")
     assert(pq.select("msg").count() === 100)
+    val pqRows = pq.select("id", "msg").collect().toSet
+    // a parquet + ORC table scans columnar too
+    val pqOrcDir = tmp()
+    Seq("parquet" -> (1 to 50), "orc" -> (51 to 100)).foreach { case (format, ids) =>
+      ids.map(i => (i, s"m$i")).toDF("id", "msg").write.format("graft-streaming")
+        .options(opts(pqOrcDir, "format" -> format)).mode("append").save()
+    }
+    val pqOrc = spark.read.format("graft-streaming").options(opts(pqOrcDir)).load()
+    assert(planOf(pqOrc.select("id", "msg")).contains("ColumnarToRow"),
+      "a parquet + orc table must plan a vectorized columnar scan")
+    assert(pqOrc.select("id", "msg").collect().toSet === pqRows)
+    // with Spark's vectorized parquet reader switched off, the scan takes
+    // the row path and parquet's row decoder reads the files
+    val vectorizedKey = "spark.sql.parquet.enableVectorizedReader"
+    spark.conf.set(vectorizedKey, "false")
+    try {
+      val rowScan = spark.read.format("graft-streaming").options(opts(dir)).load()
+      assert(!planOf(rowScan.select("id", "msg")).contains("ColumnarToRow"),
+        "without the vectorized parquet reader the scan must take rows")
+      val factory = new GraftScanBuilder(rowScan.schema,
+        GraftSinkOptions.from(new CaseInsensitiveStringMap(opts(dir).asJava)))
+        .build().toBatch.createReaderFactory().asInstanceOf[GraftReaderFactory]
+      assert(!factory.columnar && !factory.parquetBatches)
+      assert(rowScan.select("id", "msg").collect().toSet === pqRows)
+    } finally spark.conf.unset(vectorizedKey)
     // a JSONL epoch lands in the same table → the scan must fall back to
     // rows uniformly (Spark requires all partitions to agree)
     (101 to 110).map(i => (i, s"m$i")).toDF("id", "msg")

@@ -259,19 +259,32 @@ class WriterContractSpec extends graft.SparkSpec {
   private val dictSchema = StructType(Seq(StructField("id", LongType),
     StructField("msg", StringType), StructField("cat", StringType)))
 
-  /** A file's (id, msg, cat) rows through the row reader and through the
-    * columnar reader of its format.
+  /** A file's rows under `schema`, with `parts` as its partition values,
+    * through the row reader and through the columnar reader; for parquet
+    * the row reader on parquet's row decoder must agree with the first.
+    * Strings come back as `String`, a null field as null.
     */
-  private def readBoth(file: String): (Seq[(Long, String, String)], Seq[(Long, String, String)]) = {
-    def values(r: org.apache.spark.sql.catalyst.InternalRow) =
-      (r.getLong(0), r.getUTF8String(1).toString, r.getUTF8String(2).toString)
-    val part = GraftInputPartition(file, Map.empty)
-    val row = new GraftPartitionReader(part, dictSchema, hconf)
-    val rows = try Iterator.continually(row.next()).takeWhile(identity)
-      .map(_ => values(row.get())).toList finally row.close()
-    val col =
-      if (file.endsWith(".parquet")) new GraftColumnarReader(part, dictSchema, hconf)
-      else new GraftOrcColumnarReader(part, dictSchema, hconf)
+  private def readBoth(file: String, schema: StructType = dictSchema,
+      parts: Map[String, String] = Map.empty): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    def values(r: org.apache.spark.sql.catalyst.InternalRow): Seq[Any] =
+      schema.fields.indices.map { i =>
+        if (r.isNullAt(i)) null
+        else r.get(i, schema(i).dataType) match {
+          case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+          case v => v
+        }
+      }
+    val part = GraftInputPartition(file, parts)
+    def rowsOf(parquetBatches: Boolean) = {
+      val row = new GraftPartitionReader(part, schema, hconf,
+        parquetBatches = parquetBatches)
+      try Iterator.continually(row.next()).takeWhile(identity)
+        .map(_ => values(row.get())).toList finally row.close()
+    }
+    val rows = rowsOf(parquetBatches = true)
+    if (file.endsWith(".parquet"))
+      assert(rowsOf(parquetBatches = false) === rows, s"parquet row decoder: $file")
+    val col = new GraftColumnarReader(part, schema, hconf)
     val batches = try Iterator.continually(col.next()).takeWhile(identity)
       .flatMap(_ => col.get().rowIterator().asScala.map(values)).toList
       finally col.close()
@@ -325,10 +338,30 @@ class WriterContractSpec extends graft.SparkSpec {
       // (d) both readers return what was sent, and compaction keeps it
       val sent = epochs.flatMap { case (ids, unique) =>
         ids.map(i => dictRow(i, unique)).map(r => (r._1, r._2, r._3)) }
-      filesByEpoch.flatMap(_.values).map(readBoth).unzip match {
+      def byId(rows: Seq[Seq[Any]]) = rows.sortBy(_.head.asInstanceOf[Long])
+      filesByEpoch.flatMap(_.values).map(readBoth(_)).unzip match {
         case (rows, batches) =>
-          assert(rows.flatten.sortBy(_._1) === sent)
-          assert(batches.flatten.sortBy(_._1) === sent)
+          val sentRows = sent.map(_.productIterator.toSeq)
+          assert(byId(rows.flatten) === sentRows)
+          assert(byId(batches.flatten) === sentRows)
+      }
+      // a partition column in the middle of the projection, a field the
+      // files lack, and projections that read no file column at all
+      val middle = StructType(Seq(StructField("id", LongType),
+        StructField("region", StringType), StructField("msg", StringType),
+        StructField("absent", StringType)))
+      val regionOnly = StructType(Seq(StructField("region", StringType)))
+      filesByEpoch.flatMap(_.toSeq).foreach { case (region, f) =>
+        val parts = Map("region" -> region)
+        val fileRows = readBoth(f)._1
+        val expected = fileRows.map(r => Seq(r(0), region, r(1), null))
+        val (rows, batches) = readBoth(f, middle, parts)
+        assert(byId(rows) === byId(expected), f)
+        assert(byId(batches) === byId(expected), f)
+        assert(readBoth(f, StructType(Nil), parts) ===
+          (fileRows.map(_ => Nil), fileRows.map(_ => Nil)), f)
+        assert(readBoth(f, regionOnly, parts) ===
+          (fileRows.map(_ => Seq(region)), fileRows.map(_ => Seq(region))), f)
       }
       def countAndSum() = {
         val df = spark.read.format("graft-streaming").options(options).load()
