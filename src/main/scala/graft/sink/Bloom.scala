@@ -324,13 +324,14 @@ object Bloom {
     filters.flatMap(walk).toSet
   }
 
-  /** OR the input files' sidecars into the single consolidated output's
-    * sidecar — only when every input has one and all geometries agree
-    * (same columns, tags, sizes); otherwise no-op (absence = no skip).
-    * Best-effort: a failure must never fail the compaction.
+  /** OR the input files' sidecars (read through `fs`) into the single
+    * consolidated output's sidecar (written through `out`, the outputs'
+    * own [[DataFs]]) — only when every input has one and all geometries
+    * agree (same columns, tags, sizes); otherwise no-op (absence = no
+    * skip). Best-effort: a failure must never fail the compaction.
     */
-  def tryMergeSidecars(
-      fs: FileSystem, inputFiles: Seq[String], outputs: Seq[Path]): Unit =
+  def tryMergeSidecars(fs: FileSystem, out: FileSystem,
+      inputFiles: Seq[String], outputs: Seq[Path]): Unit =
     if (outputs.size == 1 && inputFiles.nonEmpty) try {
       val read0 = inputFiles.map(f => read(fs, f))
       if (read0.forall(_.isDefined)) {
@@ -352,7 +353,7 @@ object Bloom {
             }
             n -> new ColBloom(h.tag, h.bits, words)
           }
-          write(fs, outputs.head.toString, new FileBloom(merged))
+          write(out, outputs.head.toString, new FileBloom(merged))
         }
       }
     } catch { case scala.util.control.NonFatal(_) => }

@@ -30,6 +30,16 @@ final class CommitLog(tableDir: String, conf: Configuration) {
 
   private val commitsDir = new Path(tableDir, CommitLog.COMMITS_DIR)
   private def fs: FileSystem = commitsDir.getFileSystem(conf)
+  /** Manifests, shards and index markers are created and renamed through
+    * [[DataFs]]: no `.crc` sidecar and, locally, no forked `chmod` per
+    * commit. A manifest carries its own checksum instead
+    * ([[CommitLog.seal]]); reads stay on the checksummed fs, which still
+    * checks a legacy manifest's `.crc`.
+    */
+  private lazy val dataFs: FileSystem = DataFs.resolve(fs)
+  // the compaction index: one empty marker, named by id, per manifest that
+  // carries compaction headers — see [[compactionManifests]]
+  private val indexDir = new Path(commitsDir, CommitLog.INDEX_DIR)
   // `<db>.<table>` — the anchor partitionSegments uses to find `k=v`
   // segments strictly below the table root
   private val dbTable = new Path(tableDir).getName
@@ -50,7 +60,7 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     * epochs, so "every streaming epoch ≤ c is consumed" replaces listing
     * each id — without it, the in-loop fold's supersedes list would grow
     * with every consumed epoch forever, and the per-commit tombstone guard
-    * below (which parses every negative manifest) would cost O(total
+    * below (which parses every compaction manifest) would cost O(total
     * epochs) per epoch over an unbounded ingest.
     */
   // ---- path residence (r16): manifests record table-RELATIVE paths ------
@@ -87,7 +97,13 @@ final class CommitLog(tableDir: String, conf: Configuration) {
       tombstoneCeiling: Option[Long] = None,
       fileStats: Map[String, String] = Map.empty): Boolean = {
     val f = fs
-    f.mkdirs(commitsDir)
+    // the index listing doubles as the probe for `_commits/`: whoever
+    // creates the directory creates the index with it, so only a table
+    // from before the index ever takes the full listing below
+    val index = indexedIds().orElse {
+      if (f.exists(commitsDir)) None
+      else { dataFs.mkdirs(indexDir); Some(Seq.empty) }
+    }
     val target = manifestPath(epochId)
     if (f.exists(target)) return false
     // A tombstoned id was consumed by a compaction: publishing it again
@@ -98,9 +114,9 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     // and relies on the false/true contract, and its nanoTime-derived ids
     // never repeat within a lineage.
     // the guard runs EVERY epoch commit, so it must open only the (few,
-    // ladder-bounded) negative manifests — ceilings and supersedes lists
-    // never appear on streaming manifests
-    val negs = if (epochId >= 0) negativeManifests() else Seq.empty
+    // ladder-bounded) compaction manifests the index lists — ceilings and
+    // supersedes lists never appear on streaming or batch manifests
+    val negs = if (epochId >= 0) compactionManifests(index) else Seq.empty
     if (epochId >= 0 &&
         (epochId <= ceilingOf(negs) ||
           negs.flatMap(_.supersedes).contains(epochId)))
@@ -110,12 +126,9 @@ final class CommitLog(tableDir: String, conf: Configuration) {
           "invisible. Restart the query against a fresh table or fresh " +
           "epoch range, or compact only epochs every writer has passed.")
     val tmp = new Path(commitsDir, s".epoch-$epochId.${java.util.UUID.randomUUID}.tmp")
+    // the format marker leads the file as part of its seal
+    // ([[CommitLog.seal]]); these are the compaction headers
     val header =
-      // format marker (readers ignore unknown # headers, so it is
-      // backward-silent): 2 = table-relative file lines. A pre-format-2
-      // binary pointed at this table would misresolve relative lines —
-      // the marker makes that diagnosable instead of mysterious.
-      Seq("#format:2") ++
       (if (supersedes.nonEmpty) Seq(s"#supersedes:${supersedes.mkString(",")}")
        else Seq.empty) ++
       watermark.map(w => s"#watermark:$w") ++
@@ -154,20 +167,27 @@ final class CommitLog(tableDir: String, conf: Configuration) {
         val dirName =
           s".epoch-$epochId.shards-${java.util.UUID.randomUUID.toString.take(8)}"
         val dir = new Path(commitsDir, dirName)
-        f.mkdirs(dir)
+        dataFs.mkdirs(dir)
         val refs = groups.zipWithIndex.map { case ((part, group), i) =>
           val name = f"shard-$i%05d"
-          val out = f.create(new Path(dir, name), false)
-          try out.write(group.map(_._2).mkString("\n")
-            .getBytes(StandardCharsets.UTF_8))
+          val bytes = group.map(_._2).mkString("\n").getBytes(StandardCharsets.UTF_8)
+          val out = dataFs.create(new Path(dir, name), false)
+          try out.write(bytes)
           finally out.close()
-          s"#shard:$dirName/$name\t$part"
+          // the shard's checksum rides its reference, which the parent's
+          // seal covers; readers that predate it take two fields
+          s"#shard:$dirName/$name\t$part\t${CommitLog.CrcField}${CommitLog.crc32(bytes)}"
         }
         (refs, Some(dir))
       }
-    val out = f.create(tmp, false)
-    try out.write((header ++ body).mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val out = dataFs.create(tmp, false)
+    try out.write(CommitLog.seal((header ++ body).mkString("\n")))
     finally out.close()
+    // a compaction manifest's index marker lands BEFORE its rename, so a
+    // guard that can see the manifest can see the marker; a marker whose
+    // manifest never lands is skipped (and swept by the next compaction).
+    // A table without the index needs none: its guard lists `_commits/`.
+    if (header.nonEmpty && index.nonEmpty) createMarker(indexDir, epochId)
     // a STALLED commit (GC pause, suspended VM) can outlive the orphan
     // sweep's age floor, which then reclaims this attempt's shard dir as
     // debris; renaming the parent in afterwards would publish a manifest
@@ -175,16 +195,17 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     // milliseconds; a reclaimed attempt returns false, so the caller
     // replays with fresh shards instead of bricking the epoch.
     if (shardDir.exists(d => !f.exists(d))) {
-      f.delete(tmp, false)
+      dataFs.delete(tmp, false)
       return false
     }
     // rename is the atomicity point. HDFS/S3A rename fails onto an existing
     // target; RawLocalFileSystem REPLACES it (POSIX), so re-check right
     // before renaming — Spark serializes epoch commits through one driver,
-    // making the remaining window unreachable in practice.
-    if (f.exists(target) || !f.rename(tmp, target)) {
-      f.delete(tmp, false)
-      shardDir.foreach(f.delete(_, true))
+    // making the remaining window unreachable in practice. A marker this
+    // attempt wrote stays: the id's manifest (whoever wrote it) is real.
+    if (f.exists(target) || !dataFs.rename(tmp, target)) {
+      dataFs.delete(tmp, false)
+      shardDir.foreach(dataFs.delete(_, true))
       false
     } else {
       // post-rename re-validation (streaming epochs): a compaction whose
@@ -197,7 +218,7 @@ final class CommitLog(tableDir: String, conf: Configuration) {
       // (A spurious throw needs TWO full compaction generations inside
       // this millisecond window — and errs loud-and-safe, not lossy.)
       if (epochId >= 0) {
-        val negs2 = negativeManifests()
+        val negs2 = compactionManifests()
         val consumed = negs2.flatMap(_.supersedes).contains(epochId)
         if (!consumed && epochId <= ceilingOf(negs2)) {
           deleteManifest(epochId)
@@ -247,7 +268,7 @@ final class CommitLog(tableDir: String, conf: Configuration) {
       resolveShards: Boolean = true,
       partitionPredicates: Seq[(String, String)] = Seq.empty): Option[Manifest] = {
     val text =
-      try CommitLog.readFully(fs, p)
+      try CommitLog.unseal(p, CommitLog.readBytes(fs, p))
       catch {
         // deleted by concurrent compaction cleanup between list and open —
         // by then its superseding manifest is already visible
@@ -271,7 +292,9 @@ final class CommitLog(tableDir: String, conf: Configuration) {
         val parts = toks.lift(1).getOrElse("").split('/')
           .filter(_.contains('='))
           .map { s => val Array(k, v) = s.split("=", 2); k -> v }.toMap
-        CommitLog.ShardRef(toks(0), parts)
+        CommitLog.ShardRef(toks(0), parts, toks.lift(2)
+          .filter(_.startsWith(CommitLog.CrcField))
+          .map(_.stripPrefix(CommitLog.CrcField)))
     }
     val (files, stats) = parseFileLines(lines.filterNot(_.startsWith("#")))
     val header = Manifest(epochId, files, supersedes, watermark, ceiling,
@@ -299,9 +322,15 @@ final class CommitLog(tableDir: String, conf: Configuration) {
         r.partitionValues.get(k).exists(_ != v) })
       .flatMap { r =>
         CommitLog.shardFileReads.incrementAndGet()
+        val shard = new Path(commitsDir, r.relPath)
         val t =
-          try CommitLog.readFully(fs, new Path(commitsDir, r.relPath))
-          catch {
+          try {
+            val bytes = CommitLog.readBytes(fs, shard)
+            val got = CommitLog.crc32(bytes)
+            r.crc.filter(_ != got).foreach(want => throw new java.io.IOException(
+              s"manifest shard $shard is corrupt: its CRC-32 is $got, its reference records $want"))
+            new String(bytes, StandardCharsets.UTF_8)
+          } catch {
             case _: java.io.FileNotFoundException =>
               if (!fs.exists(manifestPath(m.epochId))) return None
               throw new IllegalStateException(
@@ -331,26 +360,80 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     (files, stats)
   }
 
-  /** The parsed negative (compaction/batch) manifests only — the files
-    * that can carry `#supersedes:` / `#tombstone_ceiling:`. Opens just
-    * those few (tier-ladder-bounded) files; per-epoch callers must use
-    * this, never a parse of every manifest.
+  /** The ids the compaction index lists, or None when the table has no
+    * index: `_commits/` absent, or created by a graft that predates it.
     */
-  private def negativeManifests(): Seq[Manifest] = {
+  private def indexedIds(): Option[Seq[Long]] =
+    try Some(fs.listStatus(indexDir).toSeq.flatMap(_.getPath.getName.toLongOption))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Every negative (compaction or batch) manifest id of a full listing —
+    * the compaction manifests of a table without the index.
+    */
+  private def negativeIds(): Seq[Long] = {
     val f = fs
     if (!f.exists(commitsDir)) return Seq.empty
     f.listStatus(commitsDir).toSeq.map(_.getPath.getName)
       .collect { case CommitLog.ManifestName(id) if id.toLong < 0L => id.toLong }
+  }
+
+  /** The parsed manifests that can carry `#supersedes:`, `#watermark:` or
+    * `#tombstone_ceiling:` — only [[Compact]] writes those, under its lock.
+    * With the index (`index`, by default a fresh listing of it) these are
+    * exactly the ids it lists, so the per-epoch guard opens the few
+    * (tier-ladder-bounded) compaction manifests and lists nothing else;
+    * a marker whose manifest is gone is skipped, as a manifest that
+    * vanishes between list and read always was. Without the index, every
+    * negative manifest of a full listing.
+    */
+  private def compactionManifests(
+      index: Option[Seq[Long]] = indexedIds()): Seq[Manifest] =
+    index.getOrElse(negativeIds()).flatMap(id =>
       // headers only: supersedes/ceiling/watermark live in the parent —
       // this per-epoch read must never pay a sharded manifest's file lines
-      .flatMap(id => readManifest(id, manifestPath(id), resolveShards = false))
+      readManifest(id, manifestPath(id), resolveShards = false))
+
+  /** Write-once: a marker left by a crashed attempt of the same id stays. */
+  private def createMarker(dir: Path, id: Long): Unit =
+    try dataFs.create(new Path(dir, id.toString), false).close()
+    catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
+
+  /** Give a table whose `_commits/` predates the compaction index one, and
+    * sweep the index of markers whose manifest is gone. Compact calls this
+    * under its lock, the only place manifests with compaction headers are
+    * written: the markers of a migration are built under a temporary name
+    * and the directory is renamed into place last, so no guard ever sees
+    * a partial index. A crashed migration leaves the index absent, and the
+    * next one removes its temporary directory.
+    */
+  private[sink] def ensureCompactionIndex(): Unit = {
+    val f = fs
+    indexedIds() match {
+      case Some(ids) =>
+        ids.filterNot(id => f.exists(manifestPath(id)))
+          .foreach(id => dataFs.delete(new Path(indexDir, id.toString), false))
+      case None =>
+        if (f.exists(commitsDir))
+          f.listStatus(commitsDir)
+            .filter(_.getPath.getName.startsWith(CommitLog.IndexTmpPrefix))
+            .foreach(st => dataFs.delete(st.getPath, true))
+        val tmp = new Path(commitsDir,
+          CommitLog.IndexTmpPrefix + java.util.UUID.randomUUID)
+        dataFs.mkdirs(tmp)
+        compactionManifests(None)
+          .filter(m => m.supersedes.nonEmpty || m.watermark.nonEmpty ||
+            m.tombstoneCeiling.nonEmpty)
+          .foreach(m => createMarker(tmp, m.epochId))
+        if (f.exists(indexDir) || !dataFs.rename(tmp, indexDir))
+          dataFs.delete(tmp, true)
+    }
   }
 
   /** Union of all explicit tombstone sets (direct supersedes ids; the
     * positive-epoch prefix is carried separately by the ceiling header).
     */
   def allTombstones(): Set[Long] =
-    negativeManifests().flatMap(_.supersedes).toSet
+    compactionManifests().flatMap(_.supersedes).toSet
 
   /** True if any non-streaming (negative-id: compaction or batch) manifest
     * exists — the tailing source uses this to deliver an initial snapshot
@@ -472,8 +555,7 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     *
     * Called once per trigger by the tailing source, so it must NOT read
     * every manifest: positive ids come from listStatus names alone; only
-    * the (few) negative compaction/batch manifests are opened for their
-    * watermark header.
+    * the (few) compaction manifests are opened for their watermark header.
     */
   def streamingWatermark(): Long = {
     val f = fs
@@ -481,11 +563,8 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     val names = f.listStatus(commitsDir).toSeq.map(_.getPath.getName)
       .collect { case CommitLog.ManifestName(id) => id.toLong }
     val posMax = names.filter(_ >= 0L).foldLeft(-1L)(math.max)
-    val negWatermarks = names.filter(_ < 0L).flatMap { id =>
-      readManifest(id, manifestPath(id), resolveShards = false)
-        .flatMap(_.watermark)
-    }
-    negWatermarks.foldLeft(posMax)(math.max)
+    compactionManifests(indexedIds().orElse(Some(names.filter(_ < 0L))))
+      .flatMap(_.watermark).foldLeft(posMax)(math.max)
   }
 
   /** Remove a superseded manifest (post-compaction cleanup — only safe
@@ -494,11 +573,13 @@ final class CommitLog(tableDir: String, conf: Configuration) {
     * this epoch — including leftovers of its own failed commit attempts,
     * whose distinct UUIDs make the prefix listing find them too. A crash
     * between the two deletes leaves orphan shard dirs that
-    * [[Compact]]'s expired-trash sweep removes.
+    * [[Compact]]'s expired-trash sweep removes. The manifest's index
+    * marker goes right after the manifest: a marker alone is skipped.
     */
   def deleteManifest(epochId: Long): Unit = {
     val f = fs
     f.delete(manifestPath(epochId), false)
+    dataFs.delete(new Path(indexDir, epochId.toString), false)
     if (f.exists(commitsDir))
       f.listStatus(commitsDir)
         .filter(_.getPath.getName.startsWith(s".epoch-$epochId.shards-"))
@@ -538,6 +619,50 @@ final class CommitLog(tableDir: String, conf: Configuration) {
 object CommitLog {
   val COMMITS_DIR = "_commits"
 
+  /** The compaction index, under `_commits/`: see `compactionManifests`.
+    * A graft that predates it compacts without adding markers, so after
+    * an older binary compacts a table the index misses that manifest
+    * (SCALE.md); delete the directory and the next compaction rebuilds it.
+    */
+  private[sink] val INDEX_DIR = "_compactions"
+  private val IndexTmpPrefix = ".compactions-"
+
+  /** A new manifest's first line: the format marker (2 = table-relative
+    * file lines; readers skip `#` lines, so older ones read on, and a
+    * pre-format-2 binary's misresolved lines become diagnosable) and the
+    * CRC-32 of every byte after that line. It stands in for the `.crc`
+    * sidecar of the checksummed file system, which manifests bypass.
+    */
+  private val SealPrefix = "#format:2 crc32:"
+  private val CrcField = "crc32:"
+
+  private def crc32(bytes: Array[Byte]): String = {
+    val c = new java.util.zip.CRC32
+    c.update(bytes)
+    f"${c.getValue}%08x"
+  }
+
+  private def seal(rest: String): Array[Byte] = {
+    val body = rest.getBytes(StandardCharsets.UTF_8)
+    s"$SealPrefix${crc32(body)}\n".getBytes(StandardCharsets.UTF_8) ++ body
+  }
+
+  /** The text of manifest `p` after its seal line, checked against the
+    * seal's CRC; a manifest written before the seal reads whole, its
+    * `.crc` already checked by the checksummed file system.
+    */
+  private def unseal(p: Path, bytes: Array[Byte]): String = {
+    val prefix = SealPrefix.getBytes(StandardCharsets.UTF_8)
+    if (!bytes.startsWith(prefix)) return new String(bytes, StandardCharsets.UTF_8)
+    val nl = bytes.indexOf('\n'.toByte) match { case -1 => bytes.length; case i => i }
+    val want = new String(bytes, prefix.length, nl - prefix.length, StandardCharsets.UTF_8)
+    val rest = bytes.drop(nl + 1)
+    val got = crc32(rest)
+    if (got != want) throw new java.io.IOException(
+      s"manifest $p is corrupt: its CRC-32 is $got, its first line records $want")
+    new String(rest, StandardCharsets.UTF_8)
+  }
+
   /** The ONE resolution rule for recorded (format-2, table-relative)
     * paths, shared by manifest parsing and trash-ledger purging so the
     * two can never drift: absolute (`/...`) and scheme-qualified
@@ -556,11 +681,12 @@ object CommitLog {
   private val MaxListRetries = 4
 
   /** One shard of a partition-sharded manifest: its path relative to
-    * `_commits/` and the `k=v` partition values every file it lists
-    * shares (empty for files outside any partition directory).
+    * `_commits/`, the `k=v` partition values every file it lists shares
+    * (empty for files outside any partition directory), and the CRC-32
+    * of its bytes (absent on older shards, which carry a `.crc`).
     */
   final case class ShardRef(relPath: String,
-      partitionValues: Map[String, String])
+      partitionValues: Map[String, String], crc: Option[String] = None)
 
   /** Commits at or above this many files shard their entries by partition
     * directory. Default 64: streaming epochs (files ≈ touched partitions ×
@@ -580,14 +706,17 @@ object CommitLog {
     * manifest, trash-ledger, and lease readers, so EOF/charset/close
     * behavior can never drift between them.
     */
-  private[graft] def readFully(fs: FileSystem, p: Path): String = {
+  private[graft] def readFully(fs: FileSystem, p: Path): String =
+    new String(readBytes(fs, p), StandardCharsets.UTF_8)
+
+  private[graft] def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
     try {
       val bytes = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
       var n = in.read(buf)
       while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, StandardCharsets.UTF_8)
+      bytes.toByteArray
     } finally in.close()
   }
 

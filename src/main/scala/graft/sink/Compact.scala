@@ -83,6 +83,7 @@ object Compact {
     val log = new CommitLog(tableDir, conf)
     val fs = new Path(tableDir).getFileSystem(conf)
     withCompactionLock(fs, tableDir, lockStaleMillis) {
+      log.ensureCompactionIndex()
       doRun(log, fs, tableDir, retainMillis, protectEpoch, deltasOnly,
         targetFileBytes)
     }
@@ -189,6 +190,7 @@ object Compact {
     val log = new CommitLog(tableDir, conf)
     val fs = new Path(tableDir).getFileSystem(conf)
     withCompactionLock(fs, tableDir, lockStaleMillis) {
+      log.ensureCompactionIndex()
       purgeExpiredTrash(fs, tableDir, retainMillis)
       val allAtStart = log.manifests()
       val live = allAtStart.filter(_.epochId != protectEpoch).sortBy(epochOrder)
@@ -507,7 +509,7 @@ object Compact {
           // inherits its inputs' sidecars so point-lookup skipping
           // survives compaction (multi-output splits decline — absence
           // just means no bloom skip for those files)
-          Bloom.tryMergeSidecars(fs, files, targets)
+          Bloom.tryMergeSidecars(fs, dataFs, files, targets)
           targets.map(_.toString)
         } else if (ext == "orc") {
           // stripe-level concat (compressed stripes copied without decode
@@ -532,7 +534,7 @@ object Compact {
             try newStats(t.toString) = OrcIO.statsFromFile(t, fs.getConf)
             catch { case scala.util.control.NonFatal(_) => } // stats optional
           }
-          Bloom.tryMergeSidecars(fs, files, outputs)
+          Bloom.tryMergeSidecars(fs, dataFs, files, outputs)
           outputs.map(_.toString)
         } else {
           // byte-concat, split at the size target on input-file boundaries
@@ -560,7 +562,7 @@ object Compact {
               } finally in.close()
             }
           } finally if (out != null) out.close()
-          Bloom.tryMergeSidecars(fs, files, targets.toSeq)
+          Bloom.tryMergeSidecars(fs, dataFs, files, targets.toSeq)
           targets.map(_.toString).toSeq
         }
       }.toSeq

@@ -7,8 +7,10 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileS
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Shell
 
-/** Decides which file system the sink creates its landed data files (and
-  * their partition directories) and Compact.run's outputs through.
+/** Decides which file system the sink creates its landed data files
+  * (their partition directories and bloom sidecars), Compact.run's
+  * outputs, and the commit log's manifests, shards and compaction-index
+  * markers through.
   *
   *  - A checksummed fs is bypassed for its raw fs: `ChecksumFileSystem`'s
   *    output stream never propagates `flush()` (so the keep-alive could
@@ -23,8 +25,10 @@ import org.apache.hadoop.util.Shell
   *  - Anything else — HDFS, S3A, a user's own `fs.<scheme>.impl` or raw
   *    subclass — is used as configured.
   *
-  * Manifests, shards, bloom sidecars and table metadata stay on the
-  * checksummed fs: their `.crc` is checked on read.
+  * A manifest carries its own CRC-32 in place of the sidecar, and each
+  * shard's CRC-32 rides its reference in the manifest. What still goes
+  * through the checksummed fs, `.crc` checked on read: the table records
+  * (`_schema.json`, `_partitioning`), Compact's lock and its ledgers.
   */
 object DataFs {
 

@@ -146,7 +146,7 @@ final class GraftDataWriter(
 
     def close(): Unit = if (file != null) {
       statsByFile(path.toString) = file.close()
-      bloom.foreach(b => Bloom.write(fs, path.toString, b.snapshotAndReset()))
+      bloom.foreach(b => Bloom.write(dataFs, path.toString, b.snapshotAndReset()))
       file = null
     }
 

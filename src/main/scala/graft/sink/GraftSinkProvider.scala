@@ -194,6 +194,11 @@ class GraftSinkTable(writeSchema: StructType, opts: GraftSinkOptions)
   // first epoch's conf — not once per epoch or per task
   private lazy val taskConf = TaskConf.broadcast(SparkSession.active.sparkContext)
 
+  // ...and the write it validated: `_schema.json` and `_partitioning` are
+  // write-once, so a query's later epochs (same schema) reuse the first
+  // epoch's checked write instead of re-reading both records
+  @volatile private var validated: Option[(StructType, GraftWrite)] = None
+
   override def schema(): StructType = writeSchema
 
   override def capabilities(): util.Set[TableCapability] =
@@ -212,6 +217,21 @@ class GraftSinkTable(writeSchema: StructType, opts: GraftSinkOptions)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val schema = info.schema()
+    val write = validated.collect { case (s, w) if s == schema => w }
+      .getOrElse {
+        val w = new GraftWrite(schema, validate(schema), taskConf)
+        validated = Some(schema -> w)
+        w
+      }
+    new WriteBuilder {
+      override def build(): Write = write
+    }
+  }
+
+  /** The table's options resolved for a write of `schema`, with the
+    * schema and layout checked against (or recorded as) the table's.
+    */
+  private def validate(schema: StructType): GraftSinkOptions = {
     // A2 name-set schema validation (reference HiveSourceProvider.scala:55-58)
     SchemaRegistry.load(opts).foreach { recorded =>
       val want = recorded.fields.map(_.name).toSet
@@ -235,9 +255,7 @@ class GraftSinkTable(writeSchema: StructType, opts: GraftSinkOptions)
       }
     }
     SchemaRegistry.saveIfAbsent(resolved, schema)
-    new WriteBuilder {
-      override def build(): Write = new GraftWrite(schema, resolved, taskConf)
-    }
+    resolved
   }
 }
 
@@ -249,7 +267,8 @@ final class GraftWrite(schema: StructType, opts: GraftSinkOptions,
     conf: Broadcast[SerializableConfiguration])
   extends Write with Serializable with org.apache.spark.internal.Logging {
 
-  private def commitLog = new CommitLog(opts.tableDir, conf.value.value)
+  // one per query: the table hands every epoch this same write
+  @transient private lazy val commitLog = new CommitLog(opts.tableDir, conf.value.value)
 
   override def toStreaming: StreamingWrite = new StreamingWrite {
     override def createStreamingWriterFactory(
